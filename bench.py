@@ -158,83 +158,6 @@ HEADLINE = [
     "q220_watermark_lateness",
 ]
 
-# Queries whose EXECUTION PATH changed this round — emitted in the
-# bench JSON so a driver-side round-over-round timing swing on these
-# names is attributable to a re-plan, not noise or a regression
-# (r6 verdict item 3: BENCH_r06's deliberate ~12% sweep cost was only
-# explained in LOCAL_HARNESS prose). MACHINE-DERIVED since round 8
-# (r7 verdict item 3: the hand-maintained list had no reset
-# enforcement): the diff of the two newest committed
-# PLAN_FINGERPRINTS_r*.json snapshots — per-query TWO-part hash of
-# the normalized ANALYZED plan at a fixed SF plus a static AST code
-# trace (iterative operators re-plan behind localCheckpoint, so only
-# the code part can see them — tools_plan_fingerprints.py has the
-# full audit), regenerated each round on the final tree via `python
-# tools_plan_fingerprints.py --round N` and verified against the
-# tree by tests/test_plan_fingerprints.py (gate:
-# SPARK_GRAFT_FP_CHECK=1). A forgotten regeneration now surfaces as
-# a snapshot-vs-tree diff, not a silently stale list.
-def replanned_queries() -> list[str]:
-    from tools_plan_fingerprints import derive_replanned
-
-    # Total guard, same rationale as fingerprint_code_drift's: this is
-    # called AFTER the whole timed run, and a corrupt/truncated
-    # snapshot file (json.JSONDecodeError out of derive_replanned)
-    # would otherwise discard every timing over a bookkeeping error
-    # (r9 review finding — the r8-advice fix only guarded per-query
-    # failures). The sentinel is visibly not a query name, so a reader
-    # of BENCH_rN.json sees the derivation failed rather than a silent
-    # empty list.
-    try:
-        return derive_replanned()
-    except Exception as e:
-        return [f"__replanned_derivation_failed:{type(e).__name__}__"]
-
-
-def fingerprint_code_drift() -> list[str]:
-    """Queries whose STATIC code trace on the benchmarked tree differs
-    from the newest committed snapshot's — recomputed here in <1 s (no
-    Spark; pure AST hashing), so every bench run checks by default
-    what the full snapshot gate only checks under SPARK_GRAFT_FP_CHECK
-    (r8 review finding: snapshots are a filesystem glob, so a
-    half-finished or forgotten regeneration would silently ship a
-    replanned key describing a DIFFERENT tree than the one timed).
-    Plan components need a Spark session to recompute and are not
-    checked here; code traces catch any package source drift, which
-    covers the forgotten-regeneration failure mode."""
-    from tools_plan_fingerprints import code_trace_hash, committed_snapshots
-
-    # A truncated or unreadable snapshot FILE (the half-finished
-    # regeneration this docstring's motivating scenario describes)
-    # must surface as drift, not as an exception that voids the
-    # completed timed run — the per-query try below only guards
-    # per-entry failures (r9 review finding).
-    try:
-        snaps = committed_snapshots()
-        if not snaps:
-            return []
-        with open(snaps[-1][1]) as f:
-            committed = json.load(f)["fingerprints"]
-    except Exception as e:
-        return [f"__snapshot_unreadable:{type(e).__name__}__"]
-    repo = os.path.dirname(os.path.abspath(__file__))
-    drift = []
-    for q, h in sorted(committed.items()):
-        if h.startswith("ERROR") or "." not in h:
-            drift.append(q)
-            continue
-        # ANY failure here (query gone/renamed -> KeyError, a malformed
-        # snapshot entry, a package file that no longer parses) counts
-        # as drift for that query rather than raising: this runs AFTER
-        # the entire timed run, and an exception at this point would
-        # discard all timings over a bookkeeping error (r8 advice).
-        try:
-            if code_trace_hash(q, repo) != h.split(".")[1]:
-                drift.append(q)
-        except Exception:
-            drift.append(q)
-    return drift
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -290,8 +213,6 @@ def main() -> None:
                 "unpartitioned_window_warnings": window_warnings,
                 "loadavg_1m_at_start": load_start,
                 "loadavg_1m_at_end": load_end,
-                "replanned": replanned_queries(),
-                "fingerprint_code_drift": fingerprint_code_drift(),
                 "metric": "headline_queries_total_runtime",
                 "unit": "sec",
                 "value": total,

@@ -109,19 +109,9 @@ DOCUMENT_XML_SCHEMA = T.StructType(
 )
 
 
-def read_documents_xml(spark: SparkSession, path: str) -> DataFrame:
-    """S1/S2: native XML scan (xml_to_json.py:47-103 / run_pipeline.py:
-    97-102). At scale: splittable scan, column pruning into the parser.
-
-    Normalizes to the canonical nested shape (xml_to_json.py:77-96):
-    flat scalars + arrays-of-strings + indexing array of term structs.
-    """
-    raw = (
-        spark.read.format("xml")
-        .option("rowTag", "document")
-        .schema(DOCUMENT_XML_SCHEMA)
-        .load(path)
-    )
+def _canonical_documents(raw: DataFrame) -> DataFrame:
+    """Project a DOCUMENT_XML_SCHEMA scan to the canonical nested shape
+    shared by both XML readers."""
     return raw.select(
         F.col("documentID").alias("doc_id"),
         F.col("documentTitle").alias("title"),
@@ -140,6 +130,22 @@ def read_documents_xml(spark: SparkSession, path: str) -> DataFrame:
         F.coalesce(F.col("repositories.repository"), F.array()).alias("repositories"),
         F.coalesce(F.col("indexing.indexTerm"), F.array()).alias("indexing"),
     )
+
+
+def read_documents_xml(spark: SparkSession, path: str) -> DataFrame:
+    """S1/S2: native XML scan (xml_to_json.py:47-103 / run_pipeline.py:
+    97-102). At scale: splittable scan, column pruning into the parser.
+
+    Normalizes to the canonical nested shape (xml_to_json.py:77-96):
+    flat scalars + arrays-of-strings + indexing array of term structs.
+    """
+    raw = (
+        spark.read.format("xml")
+        .option("rowTag", "document")
+        .schema(DOCUMENT_XML_SCHEMA)
+        .load(path)
+    )
+    return _canonical_documents(raw)
 
 
 def read_documents_xml_with_quarantine(
@@ -174,25 +180,7 @@ def read_documents_xml_with_quarantine(
     good = raw.where(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record", "__source_file"
     )
-    docs = good.select(
-        F.col("documentID").alias("doc_id"),
-        F.col("documentTitle").alias("title"),
-        F.struct(
-            F.col("projectInfo.publicationName").alias("publication_name"),
-            F.col("projectInfo.seriesName").alias("series_name"),
-            F.col("projectInfo.volumeInfo").alias("volume_info"),
-            F.col("projectInfo.publisher").alias("publisher"),
-            F.coalesce(F.col("projectInfo.formats.type"), F.array()).alias("formats"),
-        ).alias("project_info"),
-        F.coalesce(F.col("authors.author"), F.array()).alias("authors"),
-        F.coalesce(F.col("recipients.recipient"), F.array()).alias("recipients"),
-        F.col("dates.`date-from`").alias("date_from"),
-        F.col("dates.`date-to`").alias("date_to"),
-        F.col("location.placeName").alias("location_name"),
-        F.coalesce(F.col("repositories.repository"), F.array()).alias("repositories"),
-        F.coalesce(F.col("indexing.indexTerm"), F.array()).alias("indexing"),
-    )
-    return docs, bad
+    return _canonical_documents(good), bad
 
 
 def compact_small_files(

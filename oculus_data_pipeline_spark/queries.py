@@ -50,6 +50,8 @@ ORACLE: dict[str, str] = {}
 
 def query(name: str, oracle: str | None = None):
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle

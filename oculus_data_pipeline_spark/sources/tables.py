@@ -181,7 +181,7 @@ def load_table(
 
 
 def _load_table_uncached(
-    spark: SparkSession, sf_dir: str, name: str, path: str, fanout: bool = True
+    spark: SparkSession, sf_dir: str, name: str, path: str, fanout: bool
 ) -> DataFrame:
     if name == "events":
         # events.ts has been parquet TIMESTAMP(NANOS) in some driver
