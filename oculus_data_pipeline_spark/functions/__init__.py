@@ -1,5 +1,6 @@
 from .text import (
     TITLE_KEYWORDS,
+    convert_name,
     convert_name_oracle_query,
     generate_uri,
     generate_uri_oracle_sql,
@@ -11,6 +12,7 @@ from .vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
     "TITLE_KEYWORDS",
+    "convert_name",
     "with_converted_name",
     "convert_name_oracle_query",
     "generate_uri",

@@ -90,7 +90,7 @@ TITLE_KEYWORDS = [
 ]
 
 
-def with_converted_name(df: DataFrame, name_col: str, out_col: str) -> DataFrame:
+def convert_name(c: Column | str) -> Column:
     """'Last, First' → 'First Last' / '{titles} {rest} de {Last}'.
 
     Faithful reproduction of json_classification.py:40-67 including its
@@ -98,66 +98,72 @@ def with_converted_name(df: DataFrame, name_col: str, out_col: str) -> DataFrame
     behavior, pinned by tests):
 
     - Only applies when the name contains ',' AND splitting on ', '
-      yields exactly 2 parts; otherwise passthrough.
+      yields exactly 2 parts; otherwise passthrough (NULL stays NULL).
     - Title keywords match as SUBSTRINGS ("de" matches inside
       "Frederick") and are removed via replace-all, then strip; later
       keywords test against the already-mutated remainder.
     - When any title matched, output is ``"{titles} {rest} de {last}"``
       — the hardcoded " de " of json_classification.py:66.
 
-    Implemented as a *linear* chain of 17 conditional-replace
-    projections (a naive expression fold would duplicate the remainder
-    subtree 3× per step — exponential). Still pure JVM expressions.
+    Implemented as one ``aggregate`` fold over the title keywords whose
+    state is ``struct(titles, rest)``: each step reads the remainder
+    through the lambda variable, so the expression stays linear in the
+    keyword count (an inlined fold would duplicate the remainder
+    subtree per step). A plain Column, so it also runs inside
+    ``transform`` over a name array. Pure JVM expressions.
     """
-    parts = F.split(F.col(name_col), ", ", -1)
-    df = (
-        df.withColumn("__cn_applies", F.col(name_col).contains(",") & (F.size(parts) == 2))
-        .withColumn("__cn_last", F.element_at(parts, 1))
-        .withColumn("__cn_rest", F.when(F.size(parts) >= 2, F.element_at(parts, 2)))
-        .withColumn("__cn_titles", F.lit(""))
-    )
-    for kw in TITLE_KEYWORDS:
-        hit = F.col("__cn_rest").contains(kw)
-        df = df.withColumn(
-            "__cn_titles",
-            F.when(
-                hit,
-                F.when(F.col("__cn_titles") == "", F.lit(kw)).otherwise(
-                    F.concat_ws(" ", F.col("__cn_titles"), F.lit(kw))
-                ),
-            ).otherwise(F.col("__cn_titles")),
-        ).withColumn(
-            "__cn_rest",
-            F.when(
-                hit,
+    c = F.col(c) if isinstance(c, str) else c
+    parts = F.split(c, ", ", -1)
+    last = F.element_at(parts, 1)
+
+    def step(acc: Column, kw: Column) -> Column:
+        return F.when(
+            acc["rest"].contains(kw),
+            F.struct(
+                F.concat(acc["titles"], F.array(kw)).alias("titles"),
                 # Python str.strip() semantics (all whitespace), not SQL trim
                 F.regexp_replace(
-                    F.replace(F.col("__cn_rest"), F.lit(kw), F.lit("")),
-                    r"^\s+|\s+$",
-                    "",
-                ),
-            ).otherwise(F.col("__cn_rest")),
+                    F.replace(acc["rest"], kw, F.lit("")), r"^\s+|\s+$", ""
+                ).alias("rest"),
+            ),
+        ).otherwise(acc)
+
+    def finish(acc: Column) -> Column:
+        return F.when(
+            F.size(acc["titles"]) == 0, F.concat(acc["rest"], F.lit(" "), last)
+        ).otherwise(
+            F.concat(
+                F.array_join(acc["titles"], " "), F.lit(" "), acc["rest"],
+                F.lit(" de "), last,
+            )
         )
-    converted = F.when(
-        F.col("__cn_titles") == "",
-        F.concat(F.col("__cn_rest"), F.lit(" "), F.col("__cn_last")),
-    ).otherwise(
-        F.concat(
-            F.col("__cn_titles"), F.lit(" "), F.col("__cn_rest"),
-            F.lit(" de "), F.col("__cn_last"),
-        )
+
+    converted = F.aggregate(
+        F.array(*[F.lit(kw) for kw in TITLE_KEYWORDS]),
+        F.struct(
+            F.array().cast("array<string>").alias("titles"),
+            # get() is NULL-safe out of range; the fold only runs where
+            # the split has exactly 2 parts anyway
+            F.get(parts, 1).alias("rest"),
+        ),
+        step,
+        finish,
     )
-    return df.withColumn(
-        out_col, F.when(F.col("__cn_applies"), converted).otherwise(F.col(name_col))
-    ).drop("__cn_applies", "__cn_last", "__cn_rest", "__cn_titles")
+    return F.when(c.contains(",") & (F.size(parts) == 2), converted).otherwise(c)
+
+
+def with_converted_name(df: DataFrame, name_col: str, out_col: str) -> DataFrame:
+    """``df`` plus ``out_col`` = :func:`convert_name` of ``name_col``:
+    one ``aggregate`` fold over the title keywords, one projection."""
+    return df.withColumn(out_col, convert_name(name_col))
 
 
 def convert_name_oracle_query(
     source_sql: str, id_cols: list[str], name_col: str, out_col: str
 ) -> str:
-    """DuckDB equivalent of :func:`with_converted_name` as a full query
-    over ``source_sql`` (which must yield ``id_cols`` + ``name_col``).
-    Same linear 17-step CTE chain."""
+    """DuckDB equivalent of :func:`convert_name` as a full query over
+    ``source_sql`` (which must yield ``id_cols`` + ``name_col``). A
+    linear 17-step CTE chain, one step per title keyword."""
     keep = ", ".join([*id_cols, name_col])
     parts = f"str_split({name_col}, ', ')"
     steps = [

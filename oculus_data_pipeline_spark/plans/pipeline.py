@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import generate_uri, normalize_term, strip_parenthetical, with_converted_name
+from ..functions.text import convert_name, generate_uri, normalize_term, strip_parenthetical
 from ..operators.classify import Classifier, classify_terms
 
 # Explicit schema (SURVEY.md §1.4): inference would collapse
@@ -276,10 +276,9 @@ def classify_document_terms(
     )
     labeled = classify_terms(parts, classifier, known_entities=known)
     # person terms render via convert_name (json_classification.py:80-92)
-    labeled = with_converted_name(labeled, "term", "term_display")
     labeled = labeled.withColumn(
         "term_display",
-        F.when(F.col("label") == "person", F.col("term_display")).otherwise(
+        F.when(F.col("label") == "person", convert_name("term")).otherwise(
             F.col("term")
         ),
     )
@@ -352,86 +351,129 @@ def build_document_graph(
     ``typed_parent_sub_edges=True`` restores the evident intent
     (parent_type is threaded through deliberately) and emits MIDSUB/SUB
     edges under typed parents too, sourced at the parent's uri key.
+
+    Each table is two generator passes: one ``inline`` over ``docs``
+    (Document, Person, Place and Date rows) and one over ``classified``
+    (the main term and its midsub/sub children), unioned and deduped.
     """
     from ..operators.graph import canonical_label
-    doc_nodes = docs.select(
-        F.lit("Document").alias("label"),
-        F.col("doc_id").alias("key"),
-        F.coalesce("title", F.col("doc_id")).alias("name"),
-    )
-    author_people = docs.select(F.col("doc_id"), F.explode("authors").alias("raw_name")).withColumn(
-        "rel", F.lit("AUTHOR")
-    )
-    recipient_people = docs.select(
-        F.col("doc_id"), F.explode("recipients").alias("raw_name")
-    ).withColumn("rel", F.lit("RECIPIENT"))
+
+    def row(label: str, key, name, rel: str | None) -> F.Column:
+        return F.struct(
+            F.lit(label).alias("label"),
+            key.alias("key"),
+            name.alias("name"),
+            F.lit(rel).cast("string").alias("rel"),
+        )
+
+    def present(rows: list) -> F.Column:
+        # conditional rows are NULL when their condition fails
+        return F.filter(F.array(*rows), lambda r: r.isNotNull())
+
     # convert_name runs in the classification stage (json_classification
     # .py:233-237), BEFORE the URI stage hashes the name (generate_uri
     # .py:50-53) — so reference Person nodes carry the converted
     # 'First Last' name and the URI hashes the converted string.
-    # NULL name elements (possible only on the JSON ingest surface —
-    # from_xml yields '' for empty <author/> tags) are dropped: the
-    # reference crashes there (convert_name does `',' in None`,
+    # A NULL array (JSON ingest surface) contributes no names, and NULL
+    # name ELEMENTS (possible only on the JSON ingest surface — from_xml
+    # yields '' for empty <author/> tags) are dropped: the reference
+    # crashes there (convert_name does `',' in None`,
     # json_classification.py:51), and the staged path's classify stage
     # drops them too — emitting a NULL-key Person node would diverge
     # from both (r10 review). Empty-STRING names pass through: the
     # reference MERGEs a Person with name '' and uri hash('').
-    people = with_converted_name(
-        author_people.unionByName(recipient_people).where(
-            F.col("raw_name").isNotNull()
-        ),
-        "raw_name",
-        "name",
-    ).withColumn("uri", generate_uri("name"))
-    person_nodes = people.select(
-        F.lit("Person").alias("label"), F.col("uri").alias("key"), "name"
-    )
-    person_edges = people.select(
-        F.col("uri").alias("src"), F.col("doc_id").alias("dst"), F.col("rel").alias("rel_type")
-    )
-
-    locs = docs.where(F.col("location_name").isNotNull()).select(
-        "doc_id", F.col("location_name").alias("name")
-    ).withColumn("uri", generate_uri("name"))
-    loc_nodes = locs.select(F.lit("Place").alias("label"), F.col("uri").alias("key"), "name")
-    # create_relationship (json_to_db.py:46-52) MERGEs (e)-[:LOCATION]->(d):
-    # entity → document, same as AUTHOR/RECIPIENT.
-    loc_edges = locs.select(
-        F.col("uri").alias("src"), F.col("doc_id").alias("dst"), F.lit("LOCATION").alias("rel_type")
-    )
-
-    dates = (
-        docs.select("doc_id", F.col("date_from").alias("date"), F.lit("DATE_FROM").alias("rel"))
-        .unionByName(
-            docs.select("doc_id", F.col("date_to").alias("date"), F.lit("DATE_TO").alias("rel"))
+    def people(col: str, rel: str) -> F.Column:
+        names = F.transform(
+            F.filter(
+                F.coalesce(col, F.array().cast("array<string>")),
+                lambda n: n.isNotNull(),
+            ),
+            convert_name,
         )
-        .where(F.col("date").isNotNull() & (F.length("date") > 0))
+        return F.transform(names, lambda n: row("Person", generate_uri(n), n, rel))
+
+    def dated(col: str, rel: str) -> F.Column:
+        date = F.col(col)
+        return F.when(date.isNotNull() & (F.length(date) > 0), row("Date", date, date, rel))
+
+    loc = F.col("location_name")
+    # Pass 1: one row per Document, Person, Place and Date node of each
+    # document; every row but the Document's also carries its edge.
+    doc_rows = docs.select(
+        "doc_id",
+        F.inline(
+            F.concat(
+                present(
+                    [
+                        row("Document", F.col("doc_id"), F.coalesce("title", "doc_id"), None),
+                        F.when(
+                            loc.isNotNull(), row("Place", generate_uri(loc), loc, "LOCATION")
+                        ),
+                        dated("date_from", "DATE_FROM"),
+                        dated("date_to", "DATE_TO"),
+                    ]
+                ),
+                people("authors", "AUTHOR"),
+                people("recipients", "RECIPIENT"),
+            )
+        ),
     )
-    date_nodes = dates.select(F.lit("Date").alias("label"), F.col("date").alias("key"), F.col("date").alias("name"))
-    date_edges = dates.select(
-        F.col("doc_id").alias("src"), F.col("date").alias("dst"), F.col("rel").alias("rel_type")
+    # AUTHOR/RECIPIENT and create_relationship's LOCATION (json_to_db.py:
+    # 46-52) MERGE (e)-[:REL]->(d), entity → document; DATE_FROM/DATE_TO
+    # point document → date.
+    from_doc = F.col("label") == "Date"
+    doc_edges = doc_rows.where(F.col("rel").isNotNull()).select(
+        F.when(from_doc, F.col("doc_id")).otherwise(F.col("key")).alias("src"),
+        F.when(from_doc, F.col("key")).otherwise(F.col("doc_id")).alias("dst"),
+        F.col("rel").alias("rel_type"),
     )
 
-    def entity_cols(obj):
-        canon = canonical_label(obj["type"])
-        label = (
+    # Pass 2: one row per classified term. The main entity's canonical
+    # label, node label and key are computed once, before the inlines.
+    # else-branch (canonical 'term', incl. NULL/unknown types) is keyed by
+    # TERM TEXT even when a stored uri exists; typed entities by their
+    # uri, re-derived when the staged JSON lacks one (generate_uri is
+    # deterministic, so coalesce == stored).
+    canon = F.col("canon")
+    mains = (
+        classified.where(F.col("main").isNotNull())
+        .select("doc_id", "main", "midsub", "sub", canonical_label(F.col("main.type")).alias("canon"))
+        .select(
+            "doc_id",
+            "midsub",
+            "sub",
+            "canon",
             F.when(canon == "person", "Person")
             .when(canon == "place", "Place")
             .when(canon == "organization", "Organization")
             .otherwise("Term")
+            .alias("label"),
+            F.col("main.term").alias("name"),
+            F.when(canon == "term", F.col("main.term"))
+            .otherwise(F.coalesce(F.col("main.uri"), generate_uri(F.col("main.term"))))
+            .alias("key"),
         )
-        # else-branch (canonical 'term', incl. NULL/unknown types) is
-        # keyed by TERM TEXT even when a stored uri exists; typed
-        # entities by their uri, re-derived when the staged JSON lacks
-        # one (generate_uri is deterministic, so coalesce == stored)
-        key = F.when(canon == "term", obj["term"]).otherwise(
-            F.coalesce(obj["uri"], generate_uri(obj["term"]))
+    )
+    children = ("midsub", "sub")
+    term_nodes = mains.select(
+        F.inline(
+            present(
+                [
+                    F.struct("label", "key", "name"),
+                    *[
+                        F.when(
+                            F.col(c).isNotNull(),
+                            F.struct(
+                                F.lit("Term").alias("label"),
+                                F.col(f"{c}.term").alias("key"),
+                                F.col(f"{c}.term").alias("name"),
+                            ),
+                        )
+                        for c in children
+                    ],
+                ]
+            )
         )
-        return canon, label, key
-
-    main_c, main_l, main_k = entity_cols(F.col("main"))
-    term_nodes = classified.where(F.col("main").isNotNull()).select(
-        main_l.alias("label"), main_k.alias("key"), F.col("main.term").alias("name")
     )
     # Edge direction per json_to_db.py: typed entities use
     # create_relationship (:46-52) — (e)-[:HAS_*]->(d), entity →
@@ -439,47 +481,41 @@ def build_document_graph(
     # (d)-[:HAS_TERM]->(t), document → term. Dispatch on the CANONICAL
     # label so NULL/unknown types take the else branch (HAS_TERM,
     # doc → term) instead of a NULL rel_type entity→doc edge.
-    main_is_term = main_c == "term"
-    term_edges = classified.where(F.col("main").isNotNull()).select(
-        F.when(main_is_term, F.col("doc_id")).otherwise(main_k).alias("src"),
-        F.when(main_is_term, main_k).otherwise(F.col("doc_id")).alias("dst"),
-        F.concat(F.lit("HAS_"), F.upper(main_c)).alias("rel_type"),
-    )
-
     # relate_sub_term (json_to_db.py:63-69, :121-127): sub term NODES
     # are always MERGEd (create_term, keyed by term text) but the
     # MIDSUB/SUB EDGES only materialize under Term parents — see the
     # quirk note in the docstring. Both edges hang off the MAIN term
     # (relate_sub_term gets term['term'] as the parent for midsub and
     # sub alike), matched by term text for Term parents.
-    sub_parent_ok = (
-        F.lit(True) if typed_parent_sub_edges else (main_c == "term")
+    main_is_term = canon == "term"
+    sub_parent_ok = F.lit(True) if typed_parent_sub_edges else main_is_term
+    term_edges = mains.select(
+        F.inline(
+            present(
+                [
+                    F.struct(
+                        F.when(main_is_term, F.col("doc_id")).otherwise(F.col("key")).alias("src"),
+                        F.when(main_is_term, F.col("key")).otherwise(F.col("doc_id")).alias("dst"),
+                        F.concat(F.lit("HAS_"), F.upper(canon)).alias("rel_type"),
+                    ),
+                    *[
+                        F.when(
+                            F.col(c).isNotNull() & sub_parent_ok,
+                            F.struct(
+                                F.col("key").alias("src"),
+                                F.col(f"{c}.term").alias("dst"),
+                                F.lit(c.upper()).alias("rel_type"),
+                            ),
+                        )
+                        for c in children
+                    ],
+                ]
+            )
+        )
     )
-    sub_nodes = []
-    sub_edges = []
-    for child in ("midsub", "sub"):
-        has_child = classified.where(F.col(child).isNotNull() & F.col("main").isNotNull())
-        sub_nodes.append(
-            has_child.select(
-                F.lit("Term").alias("label"),
-                F.col(f"{child}.term").alias("key"),
-                F.col(f"{child}.term").alias("name"),
-            )
-        )
-        sub_edges.append(
-            has_child.where(sub_parent_ok).select(
-                main_k.alias("src"),
-                F.col(f"{child}.term").alias("dst"),
-                F.lit(child.upper()).alias("rel_type"),
-            )
-        )
 
-    nodes = doc_nodes
-    for part in [person_nodes, loc_nodes, date_nodes, term_nodes, *sub_nodes]:
-        nodes = nodes.unionByName(part)
-    edges = person_edges
-    for part in [loc_edges, date_edges, term_edges, *sub_edges]:
-        edges = edges.unionByName(part)
+    nodes = doc_rows.select("label", "key", "name").unionByName(term_nodes)
+    edges = doc_edges.unionByName(term_edges)
     return nodes.distinct(), edges.distinct()
 
 

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import generate_uri
+from ..functions.text import convert_name, generate_uri
 from ..operators.classify import Classifier
 from .pipeline import (
     build_document_graph,
@@ -157,35 +157,19 @@ def classify_stage(docs: DataFrame, classifier: Classifier) -> DataFrame:
         ).alias("indexing")
     )
 
-    # convert author/recipient names positionally (arrays stay ordered)
-    def converted_names(col: str) -> DataFrame:
-        from ..functions.text import with_converted_name
-
-        # plain posexplode would also work, but the explicit null filter
-        # keeps empty arrays empty (posexplode_outer emits a null row
-        # for [] which the left join + coalesce below turns back into []).
-        # It also drops NULL name ELEMENTS (JSON ingest only — from_xml
-        # yields '' for empty tags), the same policy as the fused
-        # build_document_graph: the reference crashes on a None name
-        # (convert_name, json_classification.py:51), so there is no
-        # reference output to match and both engine paths agree on drop.
-        exploded = docs.select(
-            "doc_id", F.posexplode_outer(col).alias("pos", "raw_name")
-        ).where(F.col("raw_name").isNotNull())
-        conv = with_converted_name(exploded, "raw_name", "name")
-        return conv.groupBy("doc_id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("pos"), F.col("name"))
-                    )
-                ),
-                lambda s: F.struct(
-                    s["name"].alias("name"),
-                    F.lit(None).cast("string").alias("uri"),
-                ),
-            ).alias(col)
-        )
+    # convert author/recipient names in place (arrays stay ordered).
+    # NULL name ELEMENTS (JSON ingest only — from_xml yields '' for
+    # empty tags) are dropped, the same policy as the fused
+    # build_document_graph: the reference crashes on a None name
+    # (convert_name, json_classification.py:51), so there is no
+    # reference output to match and both engine paths agree on drop.
+    def converted_names(col: str) -> Column:
+        return F.transform(
+            F.filter(col, lambda n: n.isNotNull()),
+            lambda n: F.struct(
+                convert_name(n).alias("name"), F.lit(None).cast("string").alias("uri")
+            ),
+        ).alias(col)
 
     return (
         docs.select(
@@ -200,9 +184,9 @@ def classify_stage(docs: DataFrame, classifier: Classifier) -> DataFrame:
                     F.lit(None).cast("string").alias("uri"),
                 ),
             ).alias("location"),
+            converted_names("authors"),
+            converted_names("recipients"),
         )
-        .join(converted_names("authors"), "doc_id", "left")
-        .join(converted_names("recipients"), "doc_id", "left")
         .join(items, "doc_id", "left")
         .select(
             "doc_id",

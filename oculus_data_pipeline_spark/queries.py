@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .functions.hashing import key_digest_sql, md5_int, md5_int_sql
 from .functions.text import (
+    convert_name,
     convert_name_oracle_query,
     generate_uri,
     generate_uri_oracle_sql,
@@ -35,7 +36,6 @@ from .functions.text import (
     normalize_term_oracle_sql,
     strip_parenthetical,
     strip_parenthetical_oracle_sql,
-    with_converted_name,
 )
 from .operators import dedup, graph, similarity, textstats
 from .operators.textstats import toks_oracle_sql
@@ -684,7 +684,7 @@ def q22_convert_name(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     named = p.select("p_partkey", name_lf.alias("name_lf"))
-    return with_converted_name(named, "name_lf", "converted")
+    return named.withColumn("converted", convert_name("name_lf"))
 
 
 # ---------------------------------------------------------------------------

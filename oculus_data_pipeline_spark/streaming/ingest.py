@@ -13,11 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.classify import Classifier
 from ..plans.pipeline import (
     DOCUMENT_XML_SCHEMA,
+    _canonical_documents,
     build_document_graph,
     classify_document_terms,
     extract_terms,
@@ -61,25 +61,7 @@ def read_xml_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
         .schema(DOCUMENT_XML_SCHEMA)
         .load(landing_dir)
     )
-    # same canonicalization as the batch reader
-    return raw.select(
-        F.col("documentID").alias("doc_id"),
-        F.col("documentTitle").alias("title"),
-        F.struct(
-            F.col("projectInfo.publicationName").alias("publication_name"),
-            F.col("projectInfo.seriesName").alias("series_name"),
-            F.col("projectInfo.volumeInfo").alias("volume_info"),
-            F.col("projectInfo.publisher").alias("publisher"),
-            F.coalesce(F.col("projectInfo.formats.type"), F.array()).alias("formats"),
-        ).alias("project_info"),
-        F.coalesce(F.col("authors.author"), F.array()).alias("authors"),
-        F.coalesce(F.col("recipients.recipient"), F.array()).alias("recipients"),
-        F.col("dates.`date-from`").alias("date_from"),
-        F.col("dates.`date-to`").alias("date_to"),
-        F.col("location.placeName").alias("location_name"),
-        F.coalesce(F.col("repositories.repository"), F.array()).alias("repositories"),
-        F.coalesce(F.col("indexing.indexTerm"), F.array()).alias("indexing"),
-    )
+    return _canonical_documents(raw)
 
 
 def stream_pipeline_to_graph(

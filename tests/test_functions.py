@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oculus_data_pipeline_spark.functions.text import (
+    convert_name,
     generate_uri,
     normalize_term,
     strip_parenthetical,
@@ -52,6 +53,25 @@ def test_convert_name_matches_reference_model(spark, kernel_df):
     }
     for n in NAMES:
         assert out[n] == ref_model.convert_name(n), n
+
+
+def test_convert_name_inside_transform_matches_reference_model(spark):
+    """convert_name is a plain Column, so it maps over a name array
+    element by element; NULL elements stay NULL, [] stays [] and a NULL
+    array stays NULL."""
+    arrays = [NAMES, ["Jones, Frederick", None, ""], [], None]
+    df = spark.createDataFrame(
+        list(enumerate(arrays)), "id int, names array<string>"
+    )
+    rows = df.select(
+        "id", F.transform("names", convert_name).alias("converted")
+    ).orderBy("id").collect()
+    for names, r in zip(arrays, rows):
+        if names is None:
+            assert r["converted"] is None
+            continue
+        expected = [None if n is None else ref_model.convert_name(n) for n in names]
+        assert r["converted"] == expected, names
 
 
 def test_convert_name_quirks_pinned():

@@ -262,3 +262,23 @@ def test_ngram_jaccard_default_plan_is_guarded(spark, sf_dir):
     assert "(df" in guarded or "df#" in guarded
     assert not ("(df" in unguarded or "df#" in unguarded)
     assert guarded.count("HashAggregate") > unguarded.count("HashAggregate")
+
+
+def test_graph_tables_scan_xml_at_most_eight_times(spark, tmp_path):
+    """Each graph table is two generator passes — one over the documents,
+    one over the classified terms — so its plan re-reads the XML only
+    for those passes and the term extraction/classification under
+    them, not once per node or edge kind."""
+    import re
+
+    from oculus_data_pipeline_spark.operators.classify import EchoClassifier
+    from oculus_data_pipeline_spark.plans.pipeline import run_pipeline
+
+    from .test_pipeline import XML
+
+    (tmp_path / "corpus.xml").write_text(XML)
+    for table in run_pipeline(spark, str(tmp_path), EchoClassifier()):
+        plan = physical_plan(table)
+        # the formatted plan's details section lists each operator once
+        scans = len(re.findall(r"^\(\d+\) Scan xml", plan, re.M))
+        assert 1 <= scans <= 8, scans

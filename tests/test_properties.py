@@ -10,10 +10,10 @@ import string
 from hypothesis import given, settings, strategies as st
 
 from oculus_data_pipeline_spark.functions.text import (
+    convert_name,
     generate_uri,
     normalize_term,
     strip_parenthetical,
-    with_converted_name,
 )
 
 from . import ref_model
@@ -78,7 +78,7 @@ def test_convert_name_property(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(samples)], ["i", "name"]
     )
-    rows = with_converted_name(df, "name", "conv").orderBy("i").collect()
+    rows = df.select("i", "name", convert_name("name").alias("conv")).orderBy("i").collect()
     for r in rows:
         expected = ref_model.convert_name(r["name"])
         assert r["conv"] == expected, repr(r["name"])
