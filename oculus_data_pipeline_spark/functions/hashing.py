@@ -50,10 +50,6 @@ def affine_hash(h: Column, a: int, b: int, p: int = MERSENNE31) -> Column:
     return (F.lit(a) * (h % F.lit(p)) + F.lit(b)) % F.lit(p)
 
 
-def affine_hash_sql(expr: str, a: int, b: int, p: int = MERSENNE31) -> str:
-    return f"(({a} * (({expr}) % {p}) + {b}) % {p})"
-
-
 def minhash_params(num_perms: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the minhash permutation family.
 

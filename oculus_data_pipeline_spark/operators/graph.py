@@ -1,14 +1,16 @@
-"""Property-graph construction — the reference's Neo4j sink re-expressed
-as set-oriented DataFrame transforms.
+"""The term → graph mapping — the reference's Neo4j sink re-expressed as
+Column expressions.
 
-Reference parity (/root/reference/json_to_db.py): the per-document loop
-of ~13 serial Cypher MERGE transactions (:78-127) becomes two bulk
-DataFrames — ``nodes(label, key, name)`` and ``edges(src, dst,
-rel_type)`` — deduplicated before the write, which reproduces MERGE
-idempotency set-wise (SURVEY.md §3.3). The dynamic f-string edge labels
-(:47-51, :63-67) become a fixed rel_type column. Hot entities (popular
-terms) are pre-aggregated by the dropDuplicates, so the sink never sees
-per-mention write amplification — the 100 TB concern for graph sinks.
+Reference parity (json_to_db.py:104-127): each
+classified term is dispatched by ONE rule. Person, place and
+organization become typed nodes keyed by URI with an entity → document
+``HAS_*`` edge; everything else becomes a ``Term`` keyed by its text
+with a document → term ``HAS_TERM`` edge. The helpers below are that
+rule and its only copy: ``plans/pipeline.py build_document_graph`` and
+the graph-sink queries (q61/q62/q77) select them over their own rows,
+then deduplicate set-wise, which reproduces MERGE idempotency
+(SURVEY.md §3.3). The dynamic f-string edge labels (:47-51, :63-67)
+become a fixed rel_type column.
 
 Node labels: Document/Person/Place/Organization/Term (json_to_db.py:
 7-44); edge types HAS_PERSON/HAS_PLACE/HAS_ORGANIZATION/HAS_TERM
@@ -17,25 +19,15 @@ Node labels: Document/Person/Place/Organization/Term (json_to_db.py:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.text import generate_uri
-
-LABEL_FOR = {
-    "person": "Person",
-    "place": "Place",
-    "organization": "Organization",
-    "term": "Term",
-}
 
 # The reference's type dispatch (json_to_db.py:104-119) is an
 # if/elif over person/place/organization with an unconditional
 # ``else`` that files the entity as a plain index term — so NULL and
 # unknown labels are INDEX TERMS there, never a typed entity. The
 # classify operator coalesces its output onto the four known labels,
-# but callers feeding build_nodes/build_edges directly (the bypass
-# path) used to leak NULL labels through ``label == 'term'``
+# but rows reaching the graph from elsewhere (staged JSON, direct
+# callers) used to leak NULL labels through ``label == 'term'``
 # three-valued logic: NULL rel_type edges pointing entity→doc with a
 # term-text key (r9 review triage, fixed r10). canonical_label pins
 # the reference policy AT this boundary: anything outside the three
@@ -53,85 +45,33 @@ def canonical_label(label_col: F.Column) -> F.Column:
     )
 
 
-def _node_label(label_col: F.Column) -> F.Column:
-    lab = canonical_label(label_col)
-    out = F.lit("Term")
-    for raw, node in LABEL_FOR.items():
-        out = F.when(lab == raw, F.lit(node)).otherwise(out)
-    return out
+def term_node(canon: F.Column, term: F.Column, uri: F.Column) -> list[F.Column]:
+    """``label, name, key`` of a term's node, given its canonical label
+    and the URI the URI stage gives it (generate_uri.py:43-45).
+
+    Typed entities are keyed by that URI. Plain terms are keyed by
+    their text, even when a URI exists: create_term and
+    relate_index_term key by text alone (json_to_db.py:34-38, 54-60)."""
+    return [
+        F.when(canon == "person", "Person")
+        .when(canon == "place", "Place")
+        .when(canon == "organization", "Organization")
+        .otherwise("Term")
+        .alias("label"),
+        term.alias("name"),
+        F.when(canon == "term", term).otherwise(uri).alias("key"),
+    ]
 
 
-def entity_key(term_col, label_col) -> F.Column:
-    """Entity surrogate key: reference URIs for the typed entities
-    (generate_uri.py:43-45), the term text itself for plain terms
-    (which get no URI in the reference). NULL/unknown labels are
-    plain terms (see canonical_label)."""
-    return F.when(
-        canonical_label(label_col) != "term", generate_uri(term_col)
-    ).otherwise(term_col)
-
-
-def build_nodes(doc_ids: DataFrame, classified_terms: DataFrame) -> DataFrame:
-    """``nodes(label, key, name)`` from documents + classified terms.
-
-    ``doc_ids``: one row per document with a ``doc_id`` column.
-    ``classified_terms``: (doc_id, norm_term, label).
-    """
-    # Document name mirrors the reference's `d.title` property
-    # (json_to_db.py:7-15): the title when the source carries one,
-    # else the document id — same coalesce the XML pipeline path uses
-    # (plans/pipeline.py build_document_graph).
-    name_col = (
-        F.coalesce(F.col("title"), F.col("doc_id").cast("string"))
-        if "title" in doc_ids.columns
-        else F.col("doc_id").cast("string")
-    )
-    doc_nodes = doc_ids.select(
-        F.lit("Document").alias("label"),
-        F.col("doc_id").cast("string").alias("key"),
-        name_col.alias("name"),
-    )
-    entity_nodes = classified_terms.select(
-        _node_label(F.col("label")).alias("label"),
-        entity_key(F.col("norm_term"), F.col("label")).alias("key"),
-        F.col("norm_term").alias("name"),
-    )
-    # Full-row distinct here; the MERGE-idempotent sink dedups on
-    # (label, key) at write time (write_graph). Keeping all 3 columns
-    # makes the result deterministic under URI hash collisions.
-    return doc_nodes.unionByName(entity_nodes).distinct()
-
-
-def build_edges(classified_terms: DataFrame, dedup: bool = True) -> DataFrame:
-    """``edges(src, dst, rel_type)`` with reference directions
-    (json_to_db.py): typed entities point AT the document —
-    (e)-[:HAS_PERSON|HAS_PLACE|HAS_ORGANIZATION]->(d) via
-    create_relationship (:46-52) — while plain terms hang off it —
-    (d)-[:HAS_TERM]->(t) via relate_index_term (:54-60).
-
-    ``dedup=False`` skips the final distinct — a whole shuffle stage of
-    the full edge set. Safe whenever ``classified_terms`` is already
-    (doc_id, norm_term)-distinct (the classification operator's output
-    contract): the edge map is then 1:1, and MERGE idempotency is
-    still guaranteed by the sink's (src, dst, rel_type) dedup at write
-    time — the same division of labor build_nodes documents for
-    (label, key)."""
-    lab = canonical_label(F.col("label"))
-    ekey = entity_key(F.col("norm_term"), F.col("label"))
-    doc = F.col("doc_id").cast("string")
-    is_term = lab == "term"
-    edges = classified_terms.select(
-        F.when(is_term, doc).otherwise(ekey).alias("src"),
-        F.when(is_term, ekey).otherwise(doc).alias("dst"),
-        F.concat(F.lit("HAS_"), F.upper(lab)).alias("rel_type"),
-    )
-    return edges.distinct() if dedup else edges
-
-
-def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    """Default sink: parquet tables (correctness never depends on an
-    external DB). See sinks/graph_sink.py for the Neo4j connector
-    variant over the same two DataFrames."""
-    from ..sinks.graph_sink import write_graph_parquet
-
-    write_graph_parquet(nodes, edges, out_dir)
+def has_edge(canon: F.Column, key: F.Column, doc: F.Column) -> list[F.Column]:
+    """``src, dst, rel_type`` of a term's ``HAS_*`` edge, given its
+    canonical label and node key. Typed entities point AT the document
+    — (e)-[:HAS_PERSON|HAS_PLACE|HAS_ORGANIZATION]->(d) via
+    create_relationship (json_to_db.py:46-52) — while plain terms hang
+    off it — (d)-[:HAS_TERM]->(t) via relate_index_term (:54-60)."""
+    is_term = canon == "term"
+    return [
+        F.when(is_term, doc).otherwise(key).alias("src"),
+        F.when(is_term, key).otherwise(doc).alias("dst"),
+        F.concat(F.lit("HAS_"), F.upper(canon)).alias("rel_type"),
+    ]

@@ -1292,29 +1292,6 @@ def _train_pq_lists(
     return steps
 
 
-def train_pq_codebook(
-    resid: DataFrame,
-    k: int,
-    n_subspaces: int,
-    sub: int,
-    k_coarse: int,
-    n_steps: int,
-    off: int = TRAIN_OFFSET,
-) -> list[DataFrame]:
-    """Lloyd-train the residual PQ codebook on integer residuals
-    ``resid(id, list_id, r)``; returns the codebook table
-    (m, code, cvec) AFTER each step, index 0 = the next-k-ids init —
-    literal local relations, value-identical to the former checkpoint
-    chain (see :func:`_train_pq_lists`)."""
-    spark = resid.sparkSession
-    return [
-        spark.createDataFrame(step, "m long, code long, cvec array<long>")
-        for step in _train_pq_lists(
-            resid, k, n_subspaces, sub, k_coarse, n_steps, off
-        )
-    ]
-
-
 def _int_corpus(
     emb: DataFrame, id_col: str, vec_col: str, scale: int
 ) -> DataFrame:
@@ -1399,20 +1376,7 @@ def ivf_pq_trained_topk(
     # trades one local-disk materialization of (id, list_id, r)
     # against n_steps+1 recomputes of the assign projection — the
     # scans themselves are inherent to Lloyd either way.
-    resid = (
-        e.crossJoin(F.broadcast(crow))
-        .withColumn("list_id", F.array_min(_coarse_cands(k_coarse)).cid)
-        .select(
-            "id",
-            "list_id",
-            F.zip_with(
-                "xs",
-                F.element_at(F.col("ccs"), (F.col("list_id") + 1).cast("int")),
-                lambda x, c: x - c,
-            ).alias("r"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    resid = _residuals(e, crow, k_coarse).localCheckpoint(eager=True)
     cb = _train_pq_lists(resid, k, n_subspaces, sub, k_coarse, n_steps, TRAIN_OFFSET)[
         -1
     ]
@@ -1552,20 +1516,7 @@ def ivf_pq_train_objectives(
     # local-relation residual projection, materialized once across its
     # n_steps+1 training scans AND the per-step SSE parts (same
     # rationale as ivf_pq_trained_topk's checkpoint)
-    resid = (
-        e.crossJoin(F.broadcast(crow))
-        .withColumn("list_id", F.array_min(_coarse_cands(k_coarse)).cid)
-        .select(
-            "id",
-            "list_id",
-            F.zip_with(
-                "xs",
-                F.element_at(F.col("ccs"), (F.col("list_id") + 1).cast("int")),
-                lambda x, c: x - c,
-            ).alias("r"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    resid = _residuals(e, crow, k_coarse).localCheckpoint(eager=True)
     cbs = _train_pq_lists(resid, k, n_subspaces, sub, k_coarse, n_steps, TRAIN_OFFSET)
     for step, cb in enumerate(cbs):
         parts.append(

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import convert_name, generate_uri, normalize_term, strip_parenthetical
 from ..operators.classify import Classifier, classify_terms
+from ..operators.graph import canonical_label, has_edge, term_node
 
 # Explicit schema (SURVEY.md §1.4): inference would collapse
 # single-element arrays to scalars and parse dates; the reference keeps
@@ -111,7 +112,8 @@ DOCUMENT_XML_SCHEMA = T.StructType(
 
 def _canonical_documents(raw: DataFrame) -> DataFrame:
     """Project a DOCUMENT_XML_SCHEMA scan to the canonical nested shape
-    shared by both XML readers."""
+    shared by every XML reader (native, quarantine, streaming and the
+    Python data source)."""
     return raw.select(
         F.col("documentID").alias("doc_id"),
         F.col("documentTitle").alias("title"),
@@ -321,43 +323,35 @@ def classify_document_terms(
     )
 
 
-def build_document_graph(
-    docs: DataFrame, classified: DataFrame, typed_parent_sub_edges: bool = False
-):
+def build_document_graph(docs: DataFrame, classified: DataFrame):
     """K5/K6/K7: nodes + edges DataFrames (json_to_db.py:78-127
     re-expressed set-wise; ~13 serial txns/doc → 2 bulk writes).
 
     nodes(label, key, name); edges(src, dst, rel_type) where Document
     src/dst keys are doc ids and entity keys are URIs / term text.
 
-    Entity dispatch is NULL-safe via the same canonical-label policy as
-    operators/graph.py (r10): any type outside person/place/organization
-    — including NULL and unknown strings — is the reference else-branch
-    plain index term (json_to_db.py:118-119), keyed by TERM TEXT with a
-    (d)-[:HAS_TERM]->(t) edge, even when the staged JSON carries a
-    stored uri for it (add_uri_if_needed writes one for every non-'term'
-    type, generate_uri.py:43-45, but relate_index_term/create_term key
-    by term text alone, json_to_db.py:34-38,54-60 — the stored uri is
-    dead weight there).
+    Each classified main term maps to its node and ``HAS_*`` edge
+    through operators/graph.py's ``term_node``/``has_edge``, the one
+    copy of the reference's dispatch: any type outside person/place/
+    organization — including NULL and unknown strings — is the
+    else-branch plain index term (json_to_db.py:118-119), keyed by TERM
+    TEXT with a (d)-[:HAS_TERM]->(t) edge, even when the staged JSON
+    carries a stored uri for it.
 
-    Reference quirk, reproduced bug-for-bug (default): relate_sub_term
+    Reference quirk, reproduced bug-for-bug: relate_sub_term
     (json_to_db.py:63-69) MATCHes the parent as
     ``(p:<ParentType> {term: $parent_term})``, but typed nodes are
     MERGEd with only ``name``/``uri`` properties (create_person/place/
     organization, :16-32) — the MATCH yields zero rows for any typed
     parent, so the Cypher MERGEs after it never run: midsub/sub EDGES
-    exist only under Term parents. The sub term NODES always exist (the
-    separate create_term call at :122,:126 runs unconditionally).
-    ``typed_parent_sub_edges=True`` restores the evident intent
-    (parent_type is threaded through deliberately) and emits MIDSUB/SUB
-    edges under typed parents too, sourced at the parent's uri key.
+    exist only under Term parents, and every MIDSUB/SUB edge is
+    Term → Term. The sub term NODES always exist (the separate
+    create_term call at :122,:126 runs unconditionally).
 
     Each table is two generator passes: one ``inline`` over ``docs``
     (Document, Person, Place and Date rows) and one over ``classified``
     (the main term and its midsub/sub children), unioned and deduped.
     """
-    from ..operators.graph import canonical_label
-
     def row(label: str, key, name, rel: str | None) -> F.Column:
         return F.struct(
             F.lit(label).alias("label"),
@@ -430,10 +424,6 @@ def build_document_graph(
 
     # Pass 2: one row per classified term. The main entity's canonical
     # label, node label and key are computed once, before the inlines.
-    # else-branch (canonical 'term', incl. NULL/unknown types) is keyed by
-    # TERM TEXT even when a stored uri exists; typed entities by their
-    # uri, re-derived when the staged JSON lacks one (generate_uri is
-    # deterministic, so coalesce == stored).
     canon = F.col("canon")
     mains = (
         classified.where(F.col("main").isNotNull())
@@ -443,15 +433,13 @@ def build_document_graph(
             "midsub",
             "sub",
             "canon",
-            F.when(canon == "person", "Person")
-            .when(canon == "place", "Place")
-            .when(canon == "organization", "Organization")
-            .otherwise("Term")
-            .alias("label"),
-            F.col("main.term").alias("name"),
-            F.when(canon == "term", F.col("main.term"))
-            .otherwise(F.coalesce(F.col("main.uri"), generate_uri(F.col("main.term"))))
-            .alias("key"),
+            # typed entities' stored uri, re-derived when the staged JSON
+            # lacks one (generate_uri is deterministic, so coalesce == stored)
+            *term_node(
+                canon,
+                F.col("main.term"),
+                F.coalesce(F.col("main.uri"), generate_uri(F.col("main.term"))),
+            ),
         )
     )
     children = ("midsub", "sub")
@@ -475,32 +463,21 @@ def build_document_graph(
             )
         )
     )
-    # Edge direction per json_to_db.py: typed entities use
-    # create_relationship (:46-52) — (e)-[:HAS_*]->(d), entity →
-    # document; plain terms use relate_index_term (:54-60) —
-    # (d)-[:HAS_TERM]->(t), document → term. Dispatch on the CANONICAL
-    # label so NULL/unknown types take the else branch (HAS_TERM,
-    # doc → term) instead of a NULL rel_type entity→doc edge.
     # relate_sub_term (json_to_db.py:63-69, :121-127): sub term NODES
     # are always MERGEd (create_term, keyed by term text) but the
     # MIDSUB/SUB EDGES only materialize under Term parents — see the
     # quirk note in the docstring. Both edges hang off the MAIN term
     # (relate_sub_term gets term['term'] as the parent for midsub and
-    # sub alike), matched by term text for Term parents.
+    # sub alike), matched by term text.
     main_is_term = canon == "term"
-    sub_parent_ok = F.lit(True) if typed_parent_sub_edges else main_is_term
     term_edges = mains.select(
         F.inline(
             present(
                 [
-                    F.struct(
-                        F.when(main_is_term, F.col("doc_id")).otherwise(F.col("key")).alias("src"),
-                        F.when(main_is_term, F.col("key")).otherwise(F.col("doc_id")).alias("dst"),
-                        F.concat(F.lit("HAS_"), F.upper(canon)).alias("rel_type"),
-                    ),
+                    F.struct(*has_edge(canon, F.col("key"), F.col("doc_id"))),
                     *[
                         F.when(
-                            F.col(c).isNotNull() & sub_parent_ok,
+                            F.col(c).isNotNull() & main_is_term,
                             F.struct(
                                 F.col("key").alias("src"),
                                 F.col(f"{c}.term").alias("dst"),
@@ -519,12 +496,19 @@ def build_document_graph(
     return nodes.distinct(), edges.distinct()
 
 
-def run_pipeline(
-    spark: SparkSession, xml_path: str, classifier: Classifier
+def graph_from_documents(
+    docs: DataFrame, classifier: Classifier
 ) -> tuple[DataFrame, DataFrame]:
-    """The whole reference pipeline, one lazy DAG: XML → graph tables."""
-    docs = read_documents_xml(spark, xml_path)
+    """Canonical documents → graph tables: term extraction, known
+    entities, classification and graph construction."""
     terms = extract_terms(docs)
     known = known_entities_from_docs(docs)
     classified = classify_document_terms(terms, known, classifier)
     return build_document_graph(docs, classified)
+
+
+def run_pipeline(
+    spark: SparkSession, xml_path: str, classifier: Classifier
+) -> tuple[DataFrame, DataFrame]:
+    """The whole reference pipeline, one lazy DAG: XML → graph tables."""
+    return graph_from_documents(read_documents_xml(spark, xml_path), classifier)

@@ -1158,11 +1158,11 @@ _DOC_TERMS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared classified-terms plan for q60/q61/q62 (the reference's
+    """Shared classified-terms plan for q60/q61/q62/q77 (the reference's
     classification output feeding both graph-sink stages). Persisted
-    and memoized per (session, sf_dir) so the three queries — and the
-    two uses inside q61 — reuse ONE classification instead of
-    recomputing the scan + distinct + classify chain each time."""
+    and memoized per (application id, sf_dir) so the queries reuse ONE
+    classification instead of recomputing the scan + distinct +
+    classify chain each time."""
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _DOC_TERMS_CACHE.get(key)
     if cached is not None:
@@ -1179,6 +1179,28 @@ def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = classify_terms(terms, EchoClassifier(), known_entities=known).persist()
     _DOC_TERMS_CACHE[key] = df
     return df
+
+
+def _graph_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, canon, label, key, name) per classified term — the
+    term → node half of operators/graph.py's mapping over _doc_terms."""
+    canon = F.col("canon")
+    return (
+        _doc_terms(spark, sf_dir)
+        .select("doc_id", "norm_term", graph.canonical_label(F.col("label")).alias("canon"))
+        .select(
+            "doc_id",
+            "canon",
+            *graph.term_node(canon, F.col("norm_term"), generate_uri(F.col("norm_term"))),
+        )
+    )
+
+
+def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, rel_type) per classified term: its HAS_* edge."""
+    return _graph_terms(spark, sf_dir).select(
+        *graph.has_edge(F.col("canon"), F.col("key"), F.col("doc_id").cast("string"))
+    )
 
 
 @query(
@@ -1221,9 +1243,12 @@ def q60_classify_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q61_graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph sink stage 1: bulk nodes(label, key, name) with MERGE-style
     dedup (json_to_db.py:7-44 re-expressed set-wise)."""
-    classified = _doc_terms(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return graph.build_nodes(docs, classified)
+    doc = F.col("doc_id").cast("string")
+    docs = load_table(spark, sf_dir, "documents").select(
+        F.lit("Document").alias("label"), doc.alias("key"), doc.alias("name")
+    )
+    terms = _graph_terms(spark, sf_dir).select("label", "key", "name")
+    return docs.unionByName(terms).distinct()
 
 
 @query(
@@ -1244,12 +1269,12 @@ def q62_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     json_to_db.py:46-52), plain terms hang off it (relate_index_term,
     :54-60); dynamic Cypher labels → fixed rel_type column.
 
-    ``dedup=False``: the classification output is (doc_id, norm_term)-
-    distinct so the edge set is distinct by construction — the final
-    MERGE-style dedup shuffle is pushed to the sink's write-time
+    No final distinct: the classification output is (doc_id,
+    norm_term)-distinct so the edge set is distinct by construction —
+    the MERGE-style dedup shuffle is left to the sink's write-time
     (src, dst, rel_type) dropDuplicates. Oracle drops DISTINCT in
     lockstep, so both engines compute the same multiset."""
-    return graph.build_edges(_doc_terms(spark, sf_dir), dedup=False)
+    return _graph_edges(spark, sf_dir)
 
 
 
@@ -3372,7 +3397,7 @@ def q77_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk called out in SURVEY §4). The entity sits on the src side for
     typed HAS_* edges and the dst side for HAS_TERM (reference edge
     directions, json_to_db.py:46-60)."""
-    edges = graph.build_edges(_doc_terms(spark, sf_dir))
+    edges = _graph_edges(spark, sf_dir).distinct()
     entity = F.when(F.col("rel_type") == "HAS_TERM", F.col("dst")).otherwise(
         F.col("src")
     )

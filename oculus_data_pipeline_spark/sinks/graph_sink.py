@@ -20,12 +20,10 @@ from pyspark.sql import functions as F
 # create_relationship callers at :94-116 bind Person/Place/
 # Organization → Document; relate_index_term :54-60 binds
 # (d:Document)-[:HAS_TERM]->(t:Term); date edges :84-92 bind
-# (d:Document)→(:Date)). MIDSUB/SUB (relate_sub_term :63-69) carry a
-# None source: the parent is a Term in the reference-faithful default
-# graph, but under build_document_graph(typed_parent_sub_edges=True)
-# it can be any typed entity, so the writer resolves those source
-# labels from the nodes table instead of guessing.
-REL_ENDPOINT_LABELS: dict[str, tuple[str | None, str]] = {
+# (d:Document)→(:Date)). MIDSUB/SUB (relate_sub_term :63-69) are
+# Term → Term: the reference's MATCH on the parent's ``term`` property
+# finds only Term parents, and build_document_graph reproduces that.
+REL_ENDPOINT_LABELS: dict[str, tuple[str, str]] = {
     "AUTHOR": ("Person", "Document"),
     "RECIPIENT": ("Person", "Document"),
     "LOCATION": ("Place", "Document"),
@@ -35,8 +33,8 @@ REL_ENDPOINT_LABELS: dict[str, tuple[str | None, str]] = {
     "HAS_PERSON": ("Person", "Document"),
     "HAS_PLACE": ("Place", "Document"),
     "HAS_ORGANIZATION": ("Organization", "Document"),
-    "MIDSUB": (None, "Term"),
-    "SUB": (None, "Term"),
+    "MIDSUB": ("Term", "Term"),
+    "SUB": ("Term", "Term"),
 }
 
 
@@ -70,7 +68,6 @@ def relationship_write_options(
 
 
 def relationship_groups(
-    nodes: DataFrame,
     edges: DataFrame,
     persisted: list[DataFrame] | None = None,
 ) -> list[tuple[str, str, str, DataFrame]]:
@@ -81,19 +78,15 @@ def relationship_groups(
 
     rel_types outside the reference set raise (an edge written with
     wrong endpoint labels would silently MERGE orphan nodes — the
-    failure mode this function exists to prevent). MIDSUB/SUB source
-    labels are resolved from ``nodes``; a SOURCE KEY mapped to more
-    than one label is ambiguous (e.g. a term text colliding with a
-    doc id) and raises rather than guessing — duplicate edge ROWS
-    (legitimate in streaming-append output, which defers dedup to
-    read time) are NOT ambiguity and pass through (r10 advice).
+    failure mode this function exists to prevent). Duplicate edge ROWS
+    (legitimate in streaming-append output, which defers dedup to read
+    time) pass through.
 
-    ``edges`` (and the MIDSUB/SUB label-resolution join, if needed)
-    are persisted for the duration of the write so the discovery
-    aggregations and the per-group scans at write time recompute the
-    edge lineage once, not once per driver action (r10 advice). Pass a
-    list as ``persisted`` to receive the persisted handles; the caller
-    unpersists them after consuming the groups (write_graph_neo4j
+    ``edges`` is persisted for the duration of the write so the
+    rel_type discovery and the per-group scans at write time recompute
+    the edge lineage once, not once per Spark action (r10 advice).
+    Pass a list as ``persisted`` to receive the persisted handle; the
+    caller unpersists it after consuming the groups (write_graph_neo4j
     does). Without it the cache ages out under Spark's LRU.
     """
     edges = edges.persist()
@@ -111,74 +104,10 @@ def relationship_groups(
             f"REL_ENDPOINT_LABELS (labels must match the node writes "
             f"or the connector MERGEs orphan endpoints)"
         )
-    groups: list[tuple[str, str, str, DataFrame]] = []
-    for rel in sorted(present):
-        src_l, dst_l = REL_ENDPOINT_LABELS[rel]
-        if src_l is None:
-            continue  # MIDSUB/SUB: resolved below
-        sub = edges.where(F.col("rel_type") == rel)
-        groups.append((src_l, dst_l, rel, sub))
-    if {"MIDSUB", "SUB"} & present:
-        sub_edges = edges.where(F.col("rel_type").isin("MIDSUB", "SUB"))
-        key_labels = nodes.select("key", "label").distinct()
-        resolved = sub_edges.join(
-            key_labels.withColumnRenamed("key", "src").withColumnRenamed(
-                "label", "src_label"
-            ),
-            "src",
-            "left",
-        ).persist()
-        if persisted is not None:
-            persisted.append(resolved)
-        # One bounded aggregation (≤ one row per rel_type) answers all
-        # three discovery questions: the distinct source labels per
-        # rel_type, whether any single src KEY resolved to >1 label
-        # (ambiguous — collect_set per src, not a raw row count, so
-        # duplicate edge rows don't misreport), and whether any src is
-        # absent from the nodes table (left join → NULL label →
-        # collect_set size 0).
-        summary = (
-            resolved.groupBy("src", "rel_type")
-            .agg(F.collect_set("src_label").alias("labels"))
-            .groupBy("rel_type")
-            .agg(
-                F.array_distinct(
-                    F.flatten(F.collect_set("labels"))
-                ).alias("labels"),
-                F.max(F.size("labels")).alias("max_labels"),
-                F.max_by("src", F.size("labels")).alias("worst_src"),
-                F.min_by("src", F.size("labels")).alias("orphan_src"),
-                F.min(F.size("labels")).alias("min_labels"),
-            )
-            .collect()
-        )
-        for row in summary:
-            if row["max_labels"] > 1:
-                edges.unpersist()
-                resolved.unpersist()
-                raise ValueError(
-                    f"relationship_groups: source key "
-                    f"{row['worst_src']!r} of a {row['rel_type']} edge "
-                    f"exists under multiple node labels — ambiguous "
-                    f"endpoint, refusing to guess"
-                )
-            if row["min_labels"] == 0:
-                edges.unpersist()
-                resolved.unpersist()
-                raise ValueError(
-                    f"relationship_groups: {row['rel_type']} edge "
-                    f"source {row['orphan_src']!r} not found in the "
-                    f"nodes table"
-                )
-        for row in sorted(summary, key=lambda r: r["rel_type"]):
-            rel = row["rel_type"]
-            for src_l in sorted(row["labels"]):
-                sub = resolved.where(
-                    (F.col("src_label") == src_l)
-                    & (F.col("rel_type") == rel)
-                ).drop("src_label")
-                groups.append((src_l, "Term", rel, sub))
-    return groups
+    return [
+        (*REL_ENDPOINT_LABELS[rel], rel, edges.where(F.col("rel_type") == rel))
+        for rel in sorted(present)
+    ]
 
 
 def write_graph_parquet(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
@@ -299,9 +228,7 @@ def write_graph_neo4j(
         )
     held: list[DataFrame] = []  # pragma: no cover
     try:  # pragma: no cover
-        for src_l, dst_l, rel, sub in relationship_groups(
-            nodes, edges, persisted=held
-        ):
+        for src_l, dst_l, rel, sub in relationship_groups(edges, persisted=held):
             (
                 sub.write.format("org.neo4j.spark.DataSource")
                 .mode("Overwrite")

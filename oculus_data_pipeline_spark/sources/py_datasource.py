@@ -157,36 +157,14 @@ def register(spark: SparkSession) -> None:
 
 def read_documents_xml_pyds(spark: SparkSession, path: str) -> DataFrame:
     """The custom-source ingest path: oculus_xmldir → from_xml →
-    the SAME normalization as plans/pipeline.py:read_documents_xml.
+    the SAME normalization as plans/pipeline.py:read_documents_xml
+    (``_canonical_documents``).
     Golden-pinned to match the native XML scan row for row."""
-    from ..plans.pipeline import DOCUMENT_XML_SCHEMA
+    from ..plans.pipeline import DOCUMENT_XML_SCHEMA, _canonical_documents
 
     register(spark)
     raw = spark.read.format("oculus_xmldir").option("path", path).load()
     parsed = raw.select(
         F.from_xml("doc_xml", DOCUMENT_XML_SCHEMA).alias("d")
     ).select("d.*")
-    return parsed.select(
-        F.col("documentID").alias("doc_id"),
-        F.col("documentTitle").alias("title"),
-        F.struct(
-            F.col("projectInfo.publicationName").alias("publication_name"),
-            F.col("projectInfo.seriesName").alias("series_name"),
-            F.col("projectInfo.volumeInfo").alias("volume_info"),
-            F.col("projectInfo.publisher").alias("publisher"),
-            F.coalesce(F.col("projectInfo.formats.type"), F.array()).alias(
-                "formats"
-            ),
-        ).alias("project_info"),
-        F.coalesce(F.col("authors.author"), F.array()).alias("authors"),
-        F.coalesce(F.col("recipients.recipient"), F.array()).alias(
-            "recipients"
-        ),
-        F.col("dates.`date-from`").alias("date_from"),
-        F.col("dates.`date-to`").alias("date_to"),
-        F.col("location.placeName").alias("location_name"),
-        F.coalesce(F.col("repositories.repository"), F.array()).alias(
-            "repositories"
-        ),
-        F.coalesce(F.col("indexing.indexTerm"), F.array()).alias("indexing"),
-    )
+    return _canonical_documents(parsed)

@@ -15,14 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.classify import Classifier
-from ..plans.pipeline import (
-    DOCUMENT_XML_SCHEMA,
-    _canonical_documents,
-    build_document_graph,
-    classify_document_terms,
-    extract_terms,
-    known_entities_from_docs,
-)
+from ..plans.pipeline import DOCUMENT_XML_SCHEMA, _canonical_documents, graph_from_documents
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of the events table.
@@ -88,10 +81,7 @@ def stream_pipeline_to_graph(
         if not docs.head(1):
             return
         docs = docs.cache()
-        terms = extract_terms(docs)
-        known = known_entities_from_docs(docs)
-        classified = classify_document_terms(terms, known, classifier)
-        nodes, edges = build_document_graph(docs, classified)
+        nodes, edges = graph_from_documents(docs, classifier)
         nodes.write.mode("append").parquet(f"{out_dir}/nodes")
         edges.write.mode("append").parquet(f"{out_dir}/edges")
         docs.unpersist()

@@ -476,10 +476,13 @@ def test_build_edges_null_and_unknown_labels_are_index_terms(spark):
     the entity as a plain index term. Pre-r10, a NULL label slipping
     past classify's coalesce produced a NULL rel_type edge pointing
     entity->doc keyed by term text; unknown labels got Term nodes but
-    HAS_<LABEL> edges. Both are HAS_TERM doc->term now."""
+    HAS_<LABEL> edges. Through the shared term_node/has_edge mapping
+    both are HAS_TERM doc->term Term nodes keyed by text."""
+    from oculus_data_pipeline_spark.functions.text import generate_uri
     from oculus_data_pipeline_spark.operators.graph import (
-        build_edges,
-        build_nodes,
+        canonical_label,
+        has_edge,
+        term_node,
     )
 
     terms = spark.createDataFrame(
@@ -487,7 +490,18 @@ def test_build_edges_null_and_unknown_labels_are_index_terms(spark):
          (1, "gadgetry", "animal"), (2, "acme corp", "organization")],
         "doc_id long, norm_term string, label string",
     )
-    edges = {(r["src"], r["dst"]): r["rel_type"] for r in build_edges(terms).collect()}
+    canon = F.col("canon")
+    mapped = terms.select(
+        "doc_id", canonical_label(F.col("label")).alias("canon"), "norm_term"
+    ).select(
+        "doc_id", "canon", *term_node(canon, F.col("norm_term"), generate_uri(F.col("norm_term")))
+    )
+    edges = {
+        (r["src"], r["dst"]): r["rel_type"]
+        for r in mapped.select(
+            *has_edge(canon, F.col("key"), F.col("doc_id").cast("string"))
+        ).collect()
+    }
     assert edges[("1", "widgets")] == "HAS_TERM"   # NULL label -> index term
     assert edges[("1", "gadgetry")] == "HAS_TERM"  # unknown label -> index term
     assert None not in edges.values()  # pre-r10: HAS_ || upper(NULL) = NULL
@@ -496,10 +510,7 @@ def test_build_edges_null_and_unknown_labels_are_index_terms(spark):
     assert sorted(typed.values()) == ["HAS_ORGANIZATION", "HAS_PERSON"]
     assert {dst for (_, dst) in typed} == {"1", "2"}
     assert all(src.startswith("r") for (src, _) in typed)
-    nodes = build_nodes(
-        spark.createDataFrame([(1,), (2,)], "doc_id long"), terms
-    ).collect()
-    by_name = {(r["label"], r["name"]): r["key"] for r in nodes}
+    by_name = {(r["label"], r["name"]): r["key"] for r in mapped.collect()}
     # NULL/unknown-label entities are Term nodes keyed by the term text
     assert by_name[("Term", "widgets")] == "widgets"
     assert by_name[("Term", "gadgetry")] == "gadgetry"
@@ -561,8 +572,7 @@ def test_sub_edges_only_under_term_parents(spark):
     only name/uri (create_person/place/organization, :16-32) — the
     MATCH yields zero rows, so MIDSUB/SUB edges exist ONLY under Term
     parents; the sub term NODES always exist (create_term at :122,:126
-    runs unconditionally). Reproduced bug-for-bug by default;
-    typed_parent_sub_edges=True restores the evident intent."""
+    runs unconditionally). Reproduced bug-for-bug."""
     from oculus_data_pipeline_spark.plans.pipeline import build_document_graph
 
     docs, classified = _graph_fixture(
@@ -582,16 +592,11 @@ def test_sub_edges_only_under_term_parents(spark):
     assert ("Term", "letters") in node_set
     assert ("Term", "drafts") in node_set
     assert not [e for e in edge_set if e[2] in ("MIDSUB", "SUB") and e[0] == "r123"]
-    # opt-in intent semantics: edges under the typed parent's uri key
-    _, edges2 = build_document_graph(docs, classified, typed_parent_sub_edges=True)
-    edge_set2 = {(r["src"], r["dst"], r["rel_type"]) for r in edges2.collect()}
-    assert ("r123", "letters", "MIDSUB") in edge_set2
-    assert ("r123", "drafts", "SUB") in edge_set2
 
 
 def test_document_graph_null_unknown_types_are_index_terms(spark):
-    """build_document_graph's dispatch now rides the same canonical-
-    label policy as operators/graph.py (r10): NULL/unknown item types
+    """build_document_graph's dispatch rides operators/graph.py's
+    canonical-label policy (r10): NULL/unknown item types
     are else-branch index terms (json_to_db.py:118-119) — HAS_TERM,
     doc->term, keyed by TERM TEXT even when the staged JSON stored a
     uri for them (add_uri_if_needed writes one for every non-'term'

@@ -153,6 +153,32 @@ def test_pipeline_matches_reference_model(spark, xml_dir):
     )
 
 
+def test_relationship_groups_endpoints_exist_under_group_labels(spark, xml_dir):
+    """Every edge of the pipeline's own graph has both endpoints in the
+    nodes table under the labels its relationship_groups group names
+    — the Neo4j writer MATCHes endpoints by label + key, so a wrong
+    label would MERGE orphans. MIDSUB/SUB are Term → Term because the
+    graph reproduces the reference's Term-parent-only sub edges."""
+    from pyspark.sql import functions as F
+
+    from oculus_data_pipeline_spark.sinks.graph_sink import relationship_groups
+
+    nodes, edges = run_pipeline(spark, xml_dir, EchoClassifier())
+    held = []
+    groups = relationship_groups(edges, persisted=held)
+    try:
+        assert {"AUTHOR", "HAS_TERM", "MIDSUB", "SUB"} <= {rel for _, _, rel, _ in groups}
+        assert sum(sub.count() for *_, sub in groups) == edges.count()
+        for src_l, dst_l, rel, sub in groups:
+            for side, label in (("src", src_l), ("dst", dst_l)):
+                keys = nodes.where(F.col("label") == label).select(F.col("key").alias(side))
+                orphans = sub.join(keys, side, "left_anti").collect()
+                assert not orphans, (rel, side, label, orphans)
+    finally:
+        for df in held:
+            df.unpersist()
+
+
 def test_quarantine_isolates_corrupt_files(spark, tmp_path):
     from oculus_data_pipeline_spark.plans.pipeline import (
         read_documents_xml_with_quarantine,

@@ -225,20 +225,11 @@ def test_relationship_groups_labels(spark):
     """The Neo4j writer MERGEs relationship endpoints BY LABEL + key
     (r10 review: hardcoded ':Node' labels would MERGE orphan
     endpoints), so the grouping must carry the reference's Cypher
-    label pairs and resolve MIDSUB/SUB sources from the nodes table."""
+    label pairs, MIDSUB/SUB included (Term → Term)."""
     from oculus_data_pipeline_spark.sinks.graph_sink import (
         relationship_groups,
     )
 
-    nodes = spark.createDataFrame(
-        [
-            ("Document", "d1", "Doc One"),
-            ("Person", "r1", "John Jay"),
-            ("Term", "trade", "trade"),
-            ("Term", "fisheries", "fisheries"),
-        ],
-        ["label", "key", "name"],
-    )
     edges = spark.createDataFrame(
         [
             ("r1", "d1", "AUTHOR"),
@@ -247,12 +238,10 @@ def test_relationship_groups_labels(spark):
         ],
         ["src", "dst", "rel_type"],
     )
-    groups = relationship_groups(nodes, edges)
+    groups = relationship_groups(edges)
     by_rel = {rel: (s, d, sub) for s, d, rel, sub in groups}
     assert by_rel["AUTHOR"][:2] == ("Person", "Document")
     assert by_rel["HAS_TERM"][:2] == ("Document", "Term")
-    # reference-default graph: MIDSUB parent is a Term (resolved, not
-    # assumed — the same edge under a typed parent resolves typed)
     assert by_rel["MIDSUB"][:2] == ("Term", "Term")
     # groups partition the edge set exactly
     got = sorted(
@@ -263,70 +252,36 @@ def test_relationship_groups_labels(spark):
     assert got == sorted(tuple(r) for r in edges.collect())
 
 
-def test_relationship_groups_typed_parent_and_errors(spark):
+def test_relationship_groups_unknown_rel_type_raises(spark):
     from oculus_data_pipeline_spark.sinks.graph_sink import (
         relationship_groups,
     )
-
-    # typed_parent_sub_edges=True graphs: a SUB edge sourced at a
-    # Person node's uri key resolves to a Person→Term group
-    nodes = spark.createDataFrame(
-        [("Person", "r9", "George Washington"), ("Term", "army", "army")],
-        ["label", "key", "name"],
-    )
-    edges = spark.createDataFrame(
-        [("r9", "army", "SUB")], ["src", "dst", "rel_type"]
-    )
-    groups = relationship_groups(nodes, edges)
-    assert [(s, d, r) for s, d, r, _ in groups] == [("Person", "Term", "SUB")]
 
     # unknown rel_type: loud error, not orphan-label writes
     bad = spark.createDataFrame(
         [("a", "b", "MYSTERY")], ["src", "dst", "rel_type"]
     )
     with pytest.raises(ValueError, match="MYSTERY"):
-        relationship_groups(nodes, bad)
-
-    # a sub-edge source key under TWO labels is ambiguous: refuse
-    amb_nodes = spark.createDataFrame(
-        [("Term", "1790", "1790"), ("Date", "1790", "1790")],
-        ["label", "key", "name"],
-    )
-    amb_edges = spark.createDataFrame(
-        [("1790", "army", "MIDSUB")], ["src", "dst", "rel_type"]
-    )
-    with pytest.raises(ValueError, match="multiple node labels"):
-        relationship_groups(amb_nodes, amb_edges)
+        relationship_groups(bad)
 
 
 def test_relationship_groups_duplicate_rows_not_ambiguous(spark):
     """Duplicate (src,dst,rel_type) edge ROWS — legitimate in
     streaming-append output, whose contract defers dedup to read
-    time — must NOT be misreported as multi-label ambiguity (r10
-    advice: the old check counted raw rows per edge key). A missing
-    source key, by contrast, is a loud orphan error."""
+    time — pass through to their one group (r10 advice: an older
+    check counted raw rows per edge key and misreported them)."""
     from oculus_data_pipeline_spark.sinks.graph_sink import (
         relationship_groups,
     )
 
-    nodes = spark.createDataFrame(
-        [("Term", "trade", "trade"), ("Term", "fish", "fish")],
-        ["label", "key", "name"],
-    )
     dup_edges = spark.createDataFrame(
         [("trade", "fish", "MIDSUB")] * 3,  # same edge appended thrice
         ["src", "dst", "rel_type"],
     )
-    groups = relationship_groups(nodes, dup_edges)
+    groups = relationship_groups(dup_edges)
     assert [(s, d, r) for s, d, r, _ in groups] == [("Term", "Term", "MIDSUB")]
     # all three rows survive (dedup is the writer/reader's call)
     assert groups[0][3].count() == 3
-
-    orphan = spark.createDataFrame(
-        [("ghost", "fish", "SUB")], ["src", "dst", "rel_type"]
-    )
-    with pytest.raises(ValueError, match="not found in the nodes table"):
-        relationship_groups(nodes, orphan)
 
 
 def test_neo4j_write_options_golden(spark):
@@ -335,7 +290,7 @@ def test_neo4j_write_options_golden(spark):
     absent in this image, so the rendered contract — labels, keys,
     save strategy/modes per relationship group — is what a
     jar-present round plugs in against. Rendered over a graph that
-    exercises every group shape (typed endpoints + resolved SUB)."""
+    exercises every group shape (typed endpoints + Term → Term SUB)."""
     from oculus_data_pipeline_spark.sinks.graph_sink import (
         node_write_options,
         relationship_groups,
@@ -347,17 +302,6 @@ def test_neo4j_write_options_golden(spark):
         "node.keys": "key",
     }
 
-    nodes = spark.createDataFrame(
-        [
-            ("Document", "d1", "Doc One"),
-            ("Person", "r1", "John Jay"),
-            ("Place", "p1", "Paris"),
-            ("Date", "1790-01-01", "1790-01-01"),
-            ("Term", "trade", "trade"),
-            ("Term", "fish", "fish"),
-        ],
-        ["label", "key", "name"],
-    )
     edges = spark.createDataFrame(
         [
             ("r1", "d1", "AUTHOR"),
@@ -373,7 +317,7 @@ def test_neo4j_write_options_golden(spark):
     )
     rendered = {
         rel: relationship_write_options(s, d, rel)
-        for s, d, rel, _ in relationship_groups(nodes, edges)
+        for s, d, rel, _ in relationship_groups(edges)
     }
     golden = {
         "AUTHOR": ("Person", "Document"),
@@ -400,25 +344,21 @@ def test_neo4j_write_options_golden(spark):
 
 
 def test_relationship_groups_persisted_handles(spark):
-    """persisted=[] receives the cached frames (edges + the SUB
-    resolution join) so the writer can unpersist after the write —
-    the discovery aggregations and per-group scans must not recompute
-    the edge lineage once per action (r10 advice)."""
+    """persisted=[] receives the cached edge frame so the writer can
+    unpersist after the write — the rel_type discovery and per-group
+    scans must not recompute the edge lineage once per action (r10
+    advice)."""
     from oculus_data_pipeline_spark.sinks.graph_sink import (
         relationship_groups,
     )
 
-    nodes = spark.createDataFrame(
-        [("Term", "a", "a"), ("Term", "b", "b"), ("Document", "d", "d")],
-        ["label", "key", "name"],
-    )
     edges = spark.createDataFrame(
         [("d", "a", "HAS_TERM"), ("a", "b", "SUB")],
         ["src", "dst", "rel_type"],
     )
     held = []
-    groups = relationship_groups(nodes, edges, persisted=held)
-    assert len(held) == 2  # edges + resolved sub-join
+    groups = relationship_groups(edges, persisted=held)
+    assert len(held) == 1  # the edges
     assert all(df.storageLevel.useMemory for df in held)
     assert len(groups) == 2
     for df in held:
