@@ -1,17 +1,18 @@
-"""The reference pipeline as ONE lazy DataFrame DAG.
+"""The reference pipeline as one DataFrame DAG.
 
 Reference (/root/reference/run_pipeline.py:34-77): four subprocess
 stages with JSON files on disk between them —
 xml_to_json → json_classification → generate_uri → json_to_db.
 
-Here the whole thing is a single declarative plan over the native XML
-source; the only materialization points are the two graph-table writes
-at the end. Stage boundaries become named DataFrame→DataFrame
-functions (individually testable, composable — the reference's
-"resumable checkpoints" semantics, SURVEY.md §3.2), and the per-file
-ProcessPoolExecutor (run_pipeline.py:104-109) is replaced by Spark's
-own partition parallelism: at 100 TB the XML scan fans out across the
-cluster with no user-level scheduling.
+Here the whole thing is a declarative plan over the native XML source
+with two in-memory materialization points: the parsed documents and
+the classified terms, each computed once and read by both graph-table
+writes (graph_from_documents). Stage boundaries become named
+DataFrame→DataFrame functions (individually testable, composable —
+the reference's "resumable checkpoints" semantics, SURVEY.md §3.2),
+and the per-file ProcessPoolExecutor (run_pipeline.py:104-109) is
+replaced by Spark's own partition parallelism: at 100 TB the XML scan
+fans out across the cluster with no user-level scheduling.
 
 Semantic parity notes (each cites the reference behavior it preserves):
 - term triples are collected with parentheticals stripped per part and
@@ -500,15 +501,25 @@ def graph_from_documents(
     docs: DataFrame, classifier: Classifier
 ) -> tuple[DataFrame, DataFrame]:
     """Canonical documents → graph tables: term extraction, known
-    entities, classification and graph construction."""
+    entities, classification and graph construction.
+
+    The documents and the classified terms are each materialized once
+    (lazy local checkpoints) and both tables read them, so each distinct
+    term is classified once (json_classification.py:322-335). Under AQE
+    classification runs here, when this is called; the table writes
+    only project and dedup."""
+    docs = docs.localCheckpoint(eager=False)
     terms = extract_terms(docs)
     known = known_entities_from_docs(docs)
-    classified = classify_document_terms(terms, known, classifier)
+    classified = classify_document_terms(terms, known, classifier).localCheckpoint(
+        eager=False
+    )
     return build_document_graph(docs, classified)
 
 
 def run_pipeline(
     spark: SparkSession, xml_path: str, classifier: Classifier
 ) -> tuple[DataFrame, DataFrame]:
-    """The whole reference pipeline, one lazy DAG: XML → graph tables."""
+    """The whole reference pipeline: XML → graph tables, parsed and
+    classified once, when this is called (see graph_from_documents)."""
     return graph_from_documents(read_documents_xml(spark, xml_path), classifier)

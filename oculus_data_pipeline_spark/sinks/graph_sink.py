@@ -79,8 +79,8 @@ def relationship_groups(
     rel_types outside the reference set raise (an edge written with
     wrong endpoint labels would silently MERGE orphan nodes — the
     failure mode this function exists to prevent). Duplicate edge ROWS
-    (legitimate in streaming-append output, which defers dedup to read
-    time) pass through.
+    (streaming-append output keeps rows repeated across epochs) pass
+    through.
 
     ``edges`` is persisted for the duration of the write so the
     rel_type discovery and the per-group scans at write time recompute
@@ -110,10 +110,16 @@ def relationship_groups(
     ]
 
 
+def merge_nodes(nodes: DataFrame) -> DataFrame:
+    """One row per (label, key), named by the least of its names. Two
+    spellings can share a key (generate_uri folds case and spacing, so
+    'Jonor' and 'JONOR' are one Person); taking min(name) makes the kept
+    name independent of partitioning and row order."""
+    return nodes.groupBy("label", "key").agg(F.min("name").alias("name"))
+
+
 def write_graph_parquet(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    nodes.dropDuplicates(["label", "key"]).write.mode("overwrite").parquet(
-        f"{out_dir}/nodes"
-    )
+    merge_nodes(nodes).write.mode("overwrite").parquet(f"{out_dir}/nodes")
     edges.dropDuplicates(["src", "dst", "rel_type"]).write.mode("overwrite").parquet(
         f"{out_dir}/edges"
     )
@@ -158,7 +164,7 @@ def write_graph_delta_merge(
         ) from e
 
     for name, df, keys in (  # pragma: no cover - needs delta jars
-        ("nodes", nodes.dropDuplicates(["label", "key"]), ["label", "key"]),
+        ("nodes", merge_nodes(nodes), ["label", "key"]),
         (
             "edges",
             edges.dropDuplicates(["src", "dst", "rel_type"]),

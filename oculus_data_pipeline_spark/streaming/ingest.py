@@ -67,24 +67,24 @@ def stream_pipeline_to_graph(
 ):
     """Continuous (or drain-once) XML→graph ingest.
 
-    foreachBatch reuses the exact batch pipeline per micro-batch and
-    appends to the graph parquet tables; MERGE-style idempotency —
-    including for a micro-batch retried after a partial write — comes
-    from downstream dedup at read/compaction time, on (label, key)
-    for nodes and (src, dst, rel_type) for edges, the same keys
-    write_graph_parquet dedups on (Delta MERGE INTO when a
-    transactional table format is available).
+    foreachBatch reuses the exact batch pipeline per micro-batch
+    (graph_from_documents, which parses and classifies the batch once)
+    and appends to the graph parquet tables. Each batch's tables are
+    deduplicated, but rows duplicated ACROSS epochs — a node seen in
+    two increments, or a micro-batch retried after a partial write —
+    are not removed: no reader or compactor dedups the appended tables
+    (ROADMAP item 2 measured 1,924 node rows for 1,593 distinct nodes
+    over two increments). Consumers needing MERGE semantics dedup on
+    (label, key) for nodes and (src, dst, rel_type) for edges.
     """
     docs_stream = read_xml_stream(spark, landing_dir)
 
     def process_batch(docs: DataFrame, epoch_id: int) -> None:
         if not docs.head(1):
             return
-        docs = docs.cache()
         nodes, edges = graph_from_documents(docs, classifier)
         nodes.write.mode("append").parquet(f"{out_dir}/nodes")
         edges.write.mode("append").parquet(f"{out_dir}/edges")
-        docs.unpersist()
 
     writer = (
         docs_stream.writeStream.foreachBatch(process_batch)

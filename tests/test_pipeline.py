@@ -153,6 +153,46 @@ def test_pipeline_matches_reference_model(spark, xml_dir):
     )
 
 
+def test_classifier_runs_once_per_run(spark, xml_dir, tmp_path):
+    """Both graph tables read one classification: over a run and its
+    write, the classifier labels each distinct non-known term exactly
+    once (json_classification.py:322-335), not once per table."""
+    from pyspark.sql import functions as F
+
+    from oculus_data_pipeline_spark.sinks.graph_sink import write_graph_parquet
+
+    from .ref_model import normalize, strip_paren
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def label(term):
+        calls.add(1)
+        return "term"
+
+    class CountingUdfClassifier:
+        def classify(self, terms):
+            udf = F.udf(label, "string").asNondeterministic()
+            return terms.select("norm_term", udf("norm_term").alias("label"))
+
+    write_graph_parquet(
+        *run_pipeline(spark, xml_dir, CountingUdfClassifier()), str(tmp_path / "graph")
+    )
+    known = {
+        normalize(n)
+        for d in DOCS_MODEL
+        for n in [*d["authors"], *d["recipients"], d["location_name"]]
+        if n is not None
+    }
+    terms = {
+        normalize(strip_paren(part))
+        for d in DOCS_MODEL
+        for triple in d["indexing"]
+        for part in triple
+        if strip_paren(part)
+    }
+    assert calls.value == len(terms - known) > 0
+
+
 def test_relationship_groups_endpoints_exist_under_group_labels(spark, xml_dir):
     """Every edge of the pipeline's own graph has both endpoints in the
     nodes table under the labels its relationship_groups group names

@@ -264,21 +264,32 @@ def test_ngram_jaccard_default_plan_is_guarded(spark, sf_dir):
     assert guarded.count("HashAggregate") > unguarded.count("HashAggregate")
 
 
-def test_graph_tables_scan_xml_at_most_eight_times(spark, tmp_path):
-    """Each graph table is two generator passes — one over the documents,
-    one over the classified terms — so its plan re-reads the XML only
-    for those passes and the term extraction/classification under
-    them, not once per node or edge kind."""
-    import re
+def test_graph_tables_read_one_materialization(spark, tmp_path):
+    """run_pipeline parses the XML and classifies the terms once; both
+    graph tables read that one materialization. Neither table's plan
+    scans the XML, and the edges still write after the input is gone,
+    equal to an undisturbed run's graph."""
+    import shutil
 
     from oculus_data_pipeline_spark.operators.classify import EchoClassifier
     from oculus_data_pipeline_spark.plans.pipeline import run_pipeline
 
     from .test_pipeline import XML
 
-    (tmp_path / "corpus.xml").write_text(XML)
-    for table in run_pipeline(spark, str(tmp_path), EchoClassifier()):
-        plan = physical_plan(table)
-        # the formatted plan's details section lists each operator once
-        scans = len(re.findall(r"^\(\d+\) Scan xml", plan, re.M))
-        assert 1 <= scans <= 8, scans
+    def rows(df) -> set:
+        return {tuple(r) for r in df.collect()}
+
+    xml_dir = tmp_path / "xml"
+    xml_dir.mkdir()
+    (xml_dir / "corpus.xml").write_text(XML)
+    want = [rows(t) for t in run_pipeline(spark, str(xml_dir), EchoClassifier())]
+
+    nodes, edges = run_pipeline(spark, str(xml_dir), EchoClassifier())
+    for table in (nodes, edges):
+        assert "Scan xml" not in physical_plan(table)
+    out = tmp_path / "graph"
+    nodes.write.parquet(str(out / "nodes"))
+    shutil.rmtree(xml_dir)
+    edges.write.parquet(str(out / "edges"))
+    got = [rows(spark.read.parquet(str(out / t))) for t in ("nodes", "edges")]
+    assert got == want

@@ -104,6 +104,39 @@ def test_graph_sink_idempotent(spark, docs, tmp_path):
     assert len(keys) == len(set(keys)), "duplicate (label,key) after MERGE-style write"
 
 
+def test_graph_sink_node_names_independent_of_row_order(spark, tmp_path):
+    """Spellings that share a (label, key) — generate_uri folds case and
+    spacing — collapse to the least name whatever the partitioning and
+    row order, so two writes of the same nodes are identical."""
+    rows = [
+        ("Person", "r1", "Jonor"),
+        ("Person", "r1", "JONOR"),
+        ("Place", "r2", "Mount   Vernon"),
+        ("Place", "r2", "Mount Vernon"),
+        ("Term", "trade", "trade"),
+    ]
+    schema = "label string, key string, name string"
+    edges = spark.createDataFrame(
+        [("r1", "d1", "AUTHOR")], "src string, dst string, rel_type string"
+    )
+    written = []
+    for i, nodes in enumerate(
+        [
+            spark.createDataFrame(rows, schema).coalesce(1),
+            spark.createDataFrame(rows[::-1], schema).coalesce(1),
+            spark.createDataFrame(rows, schema).repartition(3, "name"),
+        ]
+    ):
+        out = str(tmp_path / f"g{i}")
+        write_graph_parquet(nodes, edges, out)
+        written.append(sorted(tuple(r) for r in spark.read.parquet(out + "/nodes").collect()))
+    assert written[0] == written[1] == written[2] == [
+        ("Person", "r1", "JONOR"),
+        ("Place", "r2", "Mount   Vernon"),
+        ("Term", "trade", "trade"),
+    ]
+
+
 def test_neo4j_sink_gated(spark, docs):
     from oculus_data_pipeline_spark.plans.pipeline import (
         build_document_graph,
