@@ -4498,7 +4498,8 @@ def q123_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views) instead of the DataFrame builder — one ANSI string
     runs on Spark and (modulo the YEAR spelling) verbatim on the
     oracle. Catalyst compiles both surfaces to identical plans, so
-    everything PLANS.md proves for the DataFrame API holds here too."""
+    everything tests/test_plan_shapes.py pins for the DataFrame API
+    holds here too."""
     from .sources.tables import register_views
 
     register_views(spark, sf_dir, "lineitem", "orders", "supplier", "nation")

@@ -110,19 +110,22 @@ def relationship_groups(
     ]
 
 
-def merge_nodes(nodes: DataFrame) -> DataFrame:
-    """One row per (label, key), named by the least of its names. Two
-    spellings can share a key (generate_uri folds case and spacing, so
-    'Jonor' and 'JONOR' are one Person); taking min(name) makes the kept
-    name independent of partitioning and row order."""
-    return nodes.groupBy("label", "key").agg(F.min("name").alias("name"))
+def merge_graph(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The graph as Cypher MERGE leaves it: one node row per (label,
+    key) and one edge row per (src, dst, rel_type). Two spellings can
+    share a key (generate_uri folds case and spacing, so 'Jonor' and
+    'JONOR' are one Person); the node keeps the least of its names, so
+    the kept name is independent of partitioning and row order."""
+    return (
+        nodes.groupBy("label", "key").agg(F.min("name").alias("name")),
+        edges.dropDuplicates(["src", "dst", "rel_type"]),
+    )
 
 
 def write_graph_parquet(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    merge_nodes(nodes).write.mode("overwrite").parquet(f"{out_dir}/nodes")
-    edges.dropDuplicates(["src", "dst", "rel_type"]).write.mode("overwrite").parquet(
-        f"{out_dir}/edges"
-    )
+    nodes, edges = merge_graph(nodes, edges)
+    nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
+    edges.write.mode("overwrite").parquet(f"{out_dir}/edges")
 
 
 def write_graph_delta_merge(
@@ -163,13 +166,10 @@ def write_graph_delta_merge(
             "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension"
         ) from e
 
-    for name, df, keys in (  # pragma: no cover - needs delta jars
-        ("nodes", merge_nodes(nodes), ["label", "key"]),
-        (
-            "edges",
-            edges.dropDuplicates(["src", "dst", "rel_type"]),
-            ["src", "dst", "rel_type"],
-        ),
+    nodes, edges = merge_graph(nodes, edges)  # pragma: no cover - needs delta jars
+    for name, df, keys in (  # pragma: no cover
+        ("nodes", nodes, ["label", "key"]),
+        ("edges", edges, ["src", "dst", "rel_type"]),
     ):
         path = f"{out_dir}/{name}"
         if DeltaTable.isDeltaTable(spark, path):
@@ -215,6 +215,7 @@ def write_graph_neo4j(
             "org.neo4j:neo4j-connector-apache-spark to spark.jars.packages"
         ) from e
 
+    nodes, edges = merge_graph(nodes, edges)
     common = {
         "url": url,
         "authentication.basic.username": user,

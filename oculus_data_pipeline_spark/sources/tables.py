@@ -139,9 +139,11 @@ def load_table(
     """``fanout=True`` opts a caller IN to the post-scan re-spread.
 
     Opt-IN, not opt-out, since round 12: a 221-query interleaved A/B
-    sweep (OPTIMIZATION_r12 §2) showed the r11 always-on fanout helps
-    only plans with real per-row work (hashing, tokenizing, regex,
-    vector folds — those win 1.2-2.9× and pass fanout=True), while
+    sweep (its per-query results were not recorded; ROADMAP item 4
+    replaces the flags with a measured rule) showed the r11 always-on
+    fanout helps only plans with real per-row work (hashing,
+    tokenizing, regex, vector folds — those win 1.2-2.9× and pass
+    fanout=True), while
     aggregation/window-dominant plans — where map-side partial
     aggregation compresses the data BEFORE any shuffle — pay the
     full-payload exchange and get nothing back (guide §2.3 "aggregate

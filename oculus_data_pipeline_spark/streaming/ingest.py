@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators.classify import Classifier
 from ..plans.pipeline import DOCUMENT_XML_SCHEMA, _canonical_documents, graph_from_documents
+from ..sinks.graph_sink import merge_graph
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of the events table.
@@ -69,20 +70,22 @@ def stream_pipeline_to_graph(
 
     foreachBatch reuses the exact batch pipeline per micro-batch
     (graph_from_documents, which parses and classifies the batch once)
-    and appends to the graph parquet tables. Each batch's tables are
-    deduplicated, but rows duplicated ACROSS epochs — a node seen in
-    two increments, or a micro-batch retried after a partial write —
-    are not removed: no reader or compactor dedups the appended tables
-    (ROADMAP item 2 measured 1,924 node rows for 1,593 distinct nodes
-    over two increments). Consumers needing MERGE semantics dedup on
-    (label, key) for nodes and (src, dst, rel_type) for edges.
+    and appends the batch sink's MERGE of it (merge_graph) to the graph
+    parquet tables, so one epoch writes one node row per (label, key)
+    and one edge row per (src, dst, rel_type). Rows duplicated ACROSS
+    epochs — a node seen in two increments, or a micro-batch retried
+    after a partial write — are not removed: no reader or compactor
+    dedups the appended tables (ROADMAP item 2 measured 1,924 node rows
+    for 1,593 distinct nodes over two increments). Consumers needing
+    MERGE semantics across epochs dedup on (label, key) for nodes and
+    (src, dst, rel_type) for edges.
     """
     docs_stream = read_xml_stream(spark, landing_dir)
 
     def process_batch(docs: DataFrame, epoch_id: int) -> None:
         if not docs.head(1):
             return
-        nodes, edges = graph_from_documents(docs, classifier)
+        nodes, edges = merge_graph(*graph_from_documents(docs, classifier))
         nodes.write.mode("append").parquet(f"{out_dir}/nodes")
         edges.write.mode("append").parquet(f"{out_dir}/edges")
 

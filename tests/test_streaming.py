@@ -9,6 +9,7 @@ import pytest
 
 from oculus_data_pipeline_spark.operators.classify import EchoClassifier
 from oculus_data_pipeline_spark.plans.pipeline import run_pipeline
+from oculus_data_pipeline_spark.sinks.graph_sink import write_graph_parquet
 from oculus_data_pipeline_spark.sources.tables import load_table
 from oculus_data_pipeline_spark.streaming.ingest import (
     read_events_stream,
@@ -114,16 +115,17 @@ def test_streaming_xml_pipeline_equals_batch(spark, tmp_path):
         spark, str(landing), str(out), EchoClassifier(), str(ckpt)
     )
     q.awaitTermination(180)
+    batch = tmp_path / "batch"
+    write_graph_parquet(*run_pipeline(spark, str(landing), EchoClassifier()), str(batch))
 
-    got_nodes = {
-        tuple(r) for r in spark.read.parquet(str(out / "nodes")).collect()
-    }
-    got_edges = {
-        tuple(r) for r in spark.read.parquet(str(out / "edges")).collect()
-    }
-    bn, be = run_pipeline(spark, str(landing), EchoClassifier())
-    assert got_nodes == {tuple(r) for r in bn.collect()}
-    assert got_edges == {tuple(r) for r in be.collect()}
+    # Multisets, not sets: one drained epoch must write exactly the rows
+    # the batch sink writes, so a duplicate row in either table fails.
+    def rows(root, table):
+        df = spark.read.parquet(str(root / table))
+        return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+    for table in ("nodes", "edges"):
+        assert rows(out, table) == rows(batch, table), table
 
 
 def test_streaming_minute_level_feeds_rollup_lattice(spark, sf_dir):
