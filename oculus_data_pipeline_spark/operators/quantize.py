@@ -840,12 +840,14 @@ def opq_rotation(
 #   * all distances are BIGINT sums of squared integer differences —
 #     order-free, tie-broken on centroid id, no float compare anywhere.
 #
-# Scale shape: each Lloyd step is ONE corpus scan (argmin projection
-# against a broadcast codebook + a bounded ≤ k·dim-row mean aggregate);
-# the per-step codebooks are tiny and lazily localCheckpoint-ed so the
-# logical plan stays LINEAR in n_steps (each step's centroids are
-# referenced twice — by the next assignment and by the empty-cluster
-# COALESCE — which would otherwise double the plan per step).
+# Both levels run the SAME trainer (:func:`_lloyd`): the coarse
+# quantizer is one subspace of width dim, the residual PQ codebook M
+# subspaces of width dim/M. Scale shape: each Lloyd step is ONE corpus
+# scan (an Arrow argmin against the driver-held codebook, emitting
+# per-partition count/objective/sum partials that merge to ≤ M·k
+# cells). Between steps the codebooks are driver-side lists of k·dim
+# ints; the search turns the final ones into single-row local
+# relations, so the logical plan holds no per-step codebook chain.
 # ---------------------------------------------------------------------------
 
 TRAIN_SCALE = 10_000
@@ -872,13 +874,11 @@ def _pq_cands(rvec, midx, k: int):
     """(d, cid) candidate structs for ONE subspace: exact BIGINT
     squared-L2 of residual slice ``rvec`` against every code row of
     subspace ``midx`` in the broadcast nested codebook column ``mm``.
-    ``F.array_min`` over these is the shared PQ argmin — ``.cid`` for
-    encoding (training + final codes), ``.d`` for the per-step descent
-    objective. The integer analogue of :func:`_subspace_candidates`;
-    ONE definition so a tie-break or indexing change cannot desync
-    training, encoding, and the attested objective (``rvec``/``midx``
-    accept columns or lambda variables, so all three call shapes
-    produce the identical expression tree)."""
+    ``F.array_min(...).cid`` over these is the final PQ encoding; the
+    (d, cid) struct order is the lowest-code tie-break the training
+    argmin in :func:`_lloyd_partials` replicates. The integer analogue
+    of :func:`_subspace_candidates` (``rvec``/``midx`` accept columns
+    or lambda variables)."""
     book = F.col("mm")
     return F.transform(
         F.sequence(F.lit(0), F.lit(k - 1)),
@@ -912,67 +912,36 @@ def _coarse_cands(k_coarse: int):
     )
 
 
-def _cent_row(cent: DataFrame) -> DataFrame:
-    """ONE broadcastable row: ccs[c0+1] = that cluster's centroid."""
-    return cent.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("c0", "cvec"))),
-            lambda s: s.cvec,
-        ).alias("ccs")
-    )
-
-
-def _cb_row(cb: DataFrame) -> DataFrame:
-    """ONE broadcastable row: mm[m+1][code+1] = that subspace
-    centroid's slice."""
-    return (
-        cb.groupBy("m")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("code", "cvec"))),
-                lambda s: s.cvec,
-            ).alias("row")
-        )
-        .groupBy()
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "row"))),
-                lambda s: s.row,
-            ).alias("mm")
-        )
-    )
-
-
 def _div_trunc(num: int, den: int) -> int:
     """Spark ``div`` in Python: integral division truncating toward
     zero (Python ``//`` floors, which differs on negative numerators —
     the shifted numerator below is non-negative on every corpus the
     grid-offset test pins, but truncation is replicated exactly
-    anyway, so the two update paths cannot diverge on any input)."""
+    anyway, so the driver-side update and the oracle's SQL cannot
+    diverge on any input)."""
     q = abs(num) // den
     return q if num >= 0 else -q
 
 
 def _ccs_local(spark, cent):
-    """:func:`_cent_row`'s ONE broadcastable row — ccs[c+1] = the c-th
-    smallest label's centroid — built directly as a single-row LOCAL
-    relation from the collected centroid list [(c0, cvec), ...].
-    Identical column, name and indexing to the aggregate form, but the
-    broadcast collects from a LocalTableScan on the driver: no job, no
-    upstream re-execution (the codebook is k·dim ints, the bounded-
-    driver-pull convention of ivf.py's train_kmeans). Embedding the
-    codebook as an in-expression literal instead was measured WORSE:
-    the argmin duplicates the book sub-tree per candidate, and a
-    k·dim literal tree per candidate made analysis + GC dominate."""
-    ccs = [[int(x) for x in v] for _, v in sorted(cent, key=lambda e: e[0])]
+    """The coarse codebook [(0, c, cvec), ...] as ONE broadcastable
+    row — ccs[c+1] = code c's centroid — built as a single-row LOCAL
+    relation, so the broadcast collects from a LocalTableScan on the
+    driver: no job, no upstream re-execution (the codebook is k·dim
+    ints, the bounded-driver-pull convention of ivf.py's
+    train_kmeans). Embedding the codebook as an in-expression literal
+    instead was measured WORSE: the argmin duplicates the book
+    sub-tree per candidate, and a k·dim literal tree per candidate
+    made analysis + GC dominate."""
+    ccs = [[int(x) for x in v] for _, _, v in sorted(cent)]
     return spark.createDataFrame([(ccs,)], "ccs array<array<bigint>>")
 
 
 def _mm_local(spark, cb):
-    """:func:`_cb_row`'s ONE broadcastable row — mm[m+1][code+1] — as a
-    single-row LOCAL relation from the collected codebook list
-    [(m, code, cvec), ...], sorted exactly like the
-    collect_list/array_sort path (by m, then code)."""
+    """The PQ codebook [(m, code, cvec), ...] as ONE broadcastable
+    row — mm[m+1][code+1] = that subspace centroid's slice — a
+    single-row LOCAL relation like :func:`_ccs_local`, sorted by m,
+    then code."""
     ms = sorted({m for m, _, _ in cb})
     mm = [
         [
@@ -986,310 +955,181 @@ def _mm_local(spark, cb):
     return spark.createDataFrame([(mm,)], "mm array<array<array<bigint>>>")
 
 
-# Above this many cores the driver no longer pulls raw per-partition
-# Lloyd partials (one row per partition × cluster — fine at local[32],
-# a multi-GB pull at 100 TB where a scan has ~10^5-10^6 splits):
-# partials pre-merge IN SPARK to exactly k (or M·k) rows per step
-# before the collect (r11 verdict item 5). Both merge paths are
-# integer-exact and bit-identical (DECIMAL(38,0) sums of int64
-# partials collect as exact Python ints); pinned by
-# tests/test_optimization_equivalence.py. Overridable for tests via
-# the session conf key below.
-_DRIVER_MERGE_MAX_CORES = 128
-_SPARK_MERGE_CONF = "oculus.quantize.sparkMergePartials"
-
-
-def _spark_merge_enabled(df: DataFrame) -> bool:
-    spark = df.sparkSession
-    forced = spark.conf.get(_SPARK_MERGE_CONF, None)
-    if forced is not None:
-        return forced.lower() == "true"
-    return spark.sparkContext.defaultParallelism > _DRIVER_MERGE_MAX_CORES
-
-
-def _merge_cells(part: DataFrame, key_cols: list[str], width: int):
-    """Spark-side pre-merge of Lloyd partials: posexplode each
-    partial's sums array to (key, pos, v) cells, sum per (key, pos) in
-    DECIMAL(38,0) (exact for int64 partials at any partition count —
-    the map-side partial aggregation means the shuffle carries at most
-    #map-tasks × k × dim tiny rows), and collect the k·dim merged
-    cells. Returns {key: (cnt, [sums])} with Python-int values,
-    bit-identical to the driver-side merge (integer addition is
-    associative and exact in both)."""
-    dec = "decimal(38,0)"
-    cells = part.select(
-        *key_cols, "cnt", F.posexplode("sums").alias("pos", "v")
+def _init_book(df: DataFrame, col: str, lo: int, k: int, n_sub: int) -> list:
+    """Lloyd init codebook [(m, code, vec)]: the rows with id in
+    [lo, lo + k) become codes id − lo, each ``col`` vector cut into
+    ``n_sub`` equal-width subspaces (n_sub = 1 is the coarse level)."""
+    rows = (
+        df.where((F.col("id") >= lo) & (F.col("id") < lo + k))
+        .select("id", col)
+        .collect()
     )
-    merged = cells.groupBy(*key_cols, "pos").agg(
-        F.sum(F.col("v").cast(dec)).alias("v"),
-        # cnt rides every pos row of its partial; count it once per key
-        F.sum(
-            F.when(F.col("pos") == 0, F.col("cnt")).cast(dec)
-        ).alias("cnt"),
-    )
-    acc: dict = {}
-    for r in merged.collect():
-        key = (
-            int(r[key_cols[0]])
-            if len(key_cols) == 1
-            else tuple(int(r[c]) for c in key_cols)
-        )
-        cnt0, sums0 = acc.get(key, (0, [0] * width))
-        sums0 = list(sums0)
-        sums0[int(r["pos"])] = int(r["v"])
-        acc[key] = (cnt0 + (int(r["cnt"]) if r["cnt"] is not None else 0), sums0)
-    return {k: v for k, v in acc.items() if v[0] > 0}
+    book = []
+    for r in rows:
+        vec = [int(x) for x in r[col]]
+        sub = len(vec) // n_sub
+        for m in range(n_sub):
+            book.append((m, int(r["id"]) - lo, vec[m * sub : (m + 1) * sub]))
+    return book
 
 
-def _coarse_partials(e: DataFrame, cents, dim: int):
-    """Per-partition Lloyd partials for the coarse step as ONE Arrow
-    stage: each batch does a vectorized int64 argmin against the
-    driver-shipped codebook (ties -> lowest cid, matching
-    array_min's (d, cid) struct order) and accumulates per-cluster
-    counts and per-component sums. Partials are merged on the driver
-    in arbitrary-precision Python ints, so the result is bit-identical
-    to the DECIMAL(38,0) aggregate it replaces while paying one narrow
-    python stage instead of a broadcast + 65-cell hash aggregate +
-    shuffle per step (guide §4.2: hand whole batches to numpy; the
-    same pattern as ivf.py's _assign). int64 is safe: |component| is
-    grid-bounded (test-pinned |x| <= TRAIN_OFFSET/2) and per-partition
-    row counts are split-bounded, so partial sums stay far below 2^63.
-    On clusters past _DRIVER_MERGE_MAX_CORES the partials pre-merge in
-    Spark (see _merge_cells) so the driver pull is O(k·dim) regardless
-    of split count. Returns {c0: (cnt, [sums])}."""
+def _lloyd_partials(df: DataFrame, col: str, book: list) -> DataFrame:
+    """ONE Lloyd step's per-partition partials as one Arrow stage.
+
+    ``book`` is a dense codebook [(m, code, vec)] of M subspaces, each
+    k codes of width len(vec). Per batch and subspace m, a vectorized
+    int64 argmin of ``col``'s m-th slice against subspace m's codes
+    (ties -> lowest code, matching array_min's (d, cid) struct order)
+    accumulates per cell the count ``cnt``, the objective ``sse`` (Σ
+    of the min squared distance) and the per-position ``sums``. Emits
+    rows (m, code, cnt, sse, sums), one per cell per partition (guide
+    §4.2: hand whole batches to numpy; the pattern of ivf.py's
+    _assign). int64 is safe: components are grid-bounded (test-pinned
+    |x| <= TRAIN_OFFSET/2) and rows per partition split-bounded, so
+    partials, sums and sse alike, stay far below 2^63; the merges add
+    them exactly."""
     import numpy as np
     import pandas as pd
     from typing import Iterator
 
-    cb = np.array([v for _, v in sorted(cents, key=lambda t: t[0])], dtype=np.int64)
-    k = cb.shape[0]
+    n_m = len({m for m, _, _ in book})
+    books = np.array([v for _, _, v in sorted(book)], dtype=np.int64)
+    k, sub = len(book) // n_m, books.shape[1]
+    books = books.reshape(n_m, k, sub)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cnt = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, dim), dtype=np.int64)
+        cnt = np.zeros((n_m, k), dtype=np.int64)
+        sse = np.zeros((n_m, k), dtype=np.int64)
+        sums = np.zeros((n_m, k, sub), dtype=np.int64)
         seen = False
         for pdf in it:
             if len(pdf) == 0:
                 continue
             seen = True
-            x = np.array(pdf["xs"].tolist(), dtype=np.int64)
-            d = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d, axis=1)  # first occurrence = lowest cid
-            cnt += np.bincount(a, minlength=k)
-            for c in range(k):
-                m = a == c
-                if m.any():
-                    sums[c] += x[m].sum(axis=0)
+            x = np.array(pdf[col].tolist(), dtype=np.int64)
+            for m in range(n_m):
+                xm = x[:, m * sub : (m + 1) * sub]
+                d = ((xm[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
+                a = np.argmin(d, axis=1)  # first occurrence = lowest code
+                cnt[m] += np.bincount(a, minlength=k)
+                np.add.at(sse[m], a, d.min(axis=1))
+                np.add.at(sums[m], a, xm)
         if seen:
             yield pd.DataFrame(
                 {
-                    "c0": np.arange(k, dtype=np.int64),
-                    "cnt": cnt,
-                    "sums": [row.tolist() for row in sums],
+                    "m": np.repeat(np.arange(n_m, dtype=np.int64), k),
+                    "code": np.tile(np.arange(k, dtype=np.int64), n_m),
+                    "cnt": cnt.reshape(-1),
+                    "sse": sse.reshape(-1),
+                    "sums": [row.tolist() for row in sums.reshape(-1, sub)],
                 }
             )
 
-    part = e.select("xs").mapInPandas(
-        batches, schema="c0 long, cnt long, sums array<long>"
+    return df.select(col).mapInPandas(
+        batches, schema="m long, code long, cnt long, sse long, sums array<long>"
     )
-    if _spark_merge_enabled(e):
-        return _merge_cells(part, ["c0"], dim)
-    acc: dict = {}
-    for r in part.collect():
-        c0 = int(r["c0"])
-        cnt0, sums0 = acc.get(c0, (0, [0] * dim))
-        acc[c0] = (
-            cnt0 + int(r["cnt"]),
-            [a + int(b) for a, b in zip(sums0, r["sums"])],
-        )
-    return {c: v for c, v in acc.items() if v[0] > 0}
 
 
-def _pq_partials(resid: DataFrame, cb_list, n_subspaces: int, sub: int):
-    """PQ twin of :func:`_coarse_partials`: per batch, per subspace,
-    vectorized int64 argmin of the residual slice against that
-    subspace's codebook (ties -> lowest code), accumulating per
-    (m, code) counts and per-position sums; driver merge in Python
-    ints. Returns {(m, code): (cnt, [sums])}."""
-    import numpy as np
-    import pandas as pd
-    from typing import Iterator
-
-    ms = sorted({m for m, _, _ in cb_list})
-    books = [
-        np.array(
-            [v for _, _, v in sorted(
-                (e for e in cb_list if e[0] == m), key=lambda e: e[1]
-            )],
-            dtype=np.int64,
-        )
-        for m in ms
-    ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        k = books[0].shape[0]
-        cnt = np.zeros((len(ms), k), dtype=np.int64)
-        sums = np.zeros((len(ms), k, sub), dtype=np.int64)
-        seen = False
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            seen = True
-            r = np.array(pdf["r"].tolist(), dtype=np.int64)
-            for mi in range(len(ms)):
-                rs = r[:, mi * sub : (mi + 1) * sub]
-                d = ((rs[:, None, :] - books[mi][None, :, :]) ** 2).sum(axis=2)
-                a = np.argmin(d, axis=1)
-                cnt[mi] += np.bincount(a, minlength=k)
-                for c in range(k):
-                    msk = a == c
-                    if msk.any():
-                        sums[mi, c] += rs[msk].sum(axis=0)
-        if seen:
-            out = {
-                "m": np.repeat(np.arange(len(ms), dtype=np.int64), k),
-                "code": np.tile(np.arange(k, dtype=np.int64), len(ms)),
-                "cnt": cnt.reshape(-1),
-                "sums": [row.tolist() for row in sums.reshape(-1, sub)],
-            }
-            yield pd.DataFrame(out)
-
-    part = resid.select("r").mapInPandas(
-        batches, schema="m long, code long, cnt long, sums array<long>"
-    )
-    if _spark_merge_enabled(resid):
-        return _merge_cells(part, ["m", "code"], sub)
+def _merge_driver(part: DataFrame) -> dict:
+    """Merge Lloyd partials on the driver: collect the per-partition
+    rows and add them in arbitrary-precision Python ints. Returns
+    {(m, code): (cnt, sse, [sums])} for the cells some row mapped to."""
     acc: dict = {}
     for r in part.collect():
         key = (int(r["m"]), int(r["code"]))
-        cnt0, sums0 = acc.get(key, (0, [0] * sub))
+        row = [int(x) for x in r["sums"]]
+        cnt, sse, sums = acc.get(key, (0, 0, [0] * len(row)))
         acc[key] = (
-            cnt0 + int(r["cnt"]),
-            [a + int(b) for a, b in zip(sums0, r["sums"])],
+            cnt + int(r["cnt"]),
+            sse + int(r["sse"]),
+            [a + b for a, b in zip(sums, row)],
         )
-    return {kk: v for kk, v in acc.items() if v[0] > 0}
+    return {key: v for key, v in acc.items() if v[0] > 0}
 
 
-def _floor_mean_ints(cnt: int, sums, off: int):
-    return [_div_trunc(int(sv) + cnt * off, cnt) - off for sv in sums]
-
-
-def _train_coarse_lists(
-    e: DataFrame, k_coarse: int, n_steps: int, off: int, dim: int
-) -> list:
-    """Lloyd training with the codebook kept ON THE DRIVER between
-    steps: each step is ONE job (scan → argmin vs the literal codebook
-    → groupBy with dim+1 aggregate cells → collect of k_coarse rows),
-    where the DataFrame-resident form paid a broadcast-exchange job, a
-    join and a checkpoint materialization per step (guide §2.4/§5 —
-    the per-step driver pull is k_coarse·dim ints, bounded at any
-    corpus size; Lloyd's per-step corpus scan is inherent). The mean
-    update runs in exact Python integer arithmetic — identical values
-    (DECIMAL(38,0) sums collect as exact ints; _div_trunc replicates
-    Spark ``div``; empty clusters keep their previous position).
-    Returns the centroid list [(c0, cvec)] AFTER each step, index 0 =
-    the lowest-id init."""
-    init_rows = (
-        e.where(F.col("id") < k_coarse)
-        .select(F.col("id").alias("c0"), F.col("xs").alias("cvec"))
-        .collect()
+def _merge_cells(part: DataFrame) -> dict:
+    """Merge the same partials IN SPARK: posexplode each partial's
+    [cnt, sse, *sums] to (m, code, pos, v) cells, sum per cell in
+    DECIMAL(38,0) (exact for int64 partials at any partition count —
+    the map-side partial aggregation means the shuffle carries at most
+    #map-tasks × M·k·(sub+2) tiny rows), and collect the merged cells.
+    Returns exactly :func:`_merge_driver`'s dict (integer addition is
+    associative and exact in both)."""
+    cells = part.select(
+        "m",
+        "code",
+        F.posexplode(F.concat(F.array("cnt", "sse"), "sums")).alias("pos", "v"),
     )
-    cur = sorted(
-        (int(r["c0"]), [int(x) for x in r["cvec"]]) for r in init_rows
+    merged = cells.groupBy("m", "code", "pos").agg(
+        F.sum(F.col("v").cast("decimal(38,0)")).alias("v")
     )
-    # the partial-merge paths key stats by centroid LABEL while the
-    # numpy argmin indexes the codebook array by POSITION — they only
-    # coincide because init ids are dense 0..k-1 (r11 advice: assert
-    # the density instead of assuming it; a fixture with id gaps below
-    # k_coarse would otherwise silently misattribute cluster updates)
-    if [c for c, _ in cur] != list(range(k_coarse)):
+    acc: dict = {}
+    for r in merged.collect():
+        acc.setdefault((int(r["m"]), int(r["code"])), {})[int(r["pos"])] = int(r["v"])
+    out = {}
+    for key, by_pos in acc.items():
+        cnt, sse, *sums = (by_pos[p] for p in range(len(by_pos)))
+        if cnt > 0:
+            out[key] = (cnt, sse, sums)
+    return out
+
+
+def _floor_mean_ints(cnt: int, sums):
+    return [_div_trunc(int(sv) + cnt * TRAIN_OFFSET, cnt) - TRAIN_OFFSET for sv in sums]
+
+
+# Above this many cores the driver no longer pulls raw per-partition
+# Lloyd partials (one row per partition × cell — fine at local[32], a
+# multi-GB pull at 100 TB where a scan has ~10^5-10^6 splits): the
+# partials merge IN SPARK to exactly M·k cells per step before the
+# collect (r11 verdict item 5). Both merges are integer-exact and
+# bit-identical (DECIMAL(38,0) sums of int64 partials collect as exact
+# Python ints); pinned by tests/test_optimization_equivalence.py.
+_DRIVER_MERGE_MAX_CORES = 128
+
+
+def _lloyd(df: DataFrame, col: str, init: list, k: int, n_steps: int):
+    """Integer Lloyd training of the codebook ``init`` [(m, code, vec)]
+    on the vectors ``df[col]``, one subspace per distinct m.
+
+    The codebook stays ON THE DRIVER between steps: each step is ONE
+    job (the :func:`_lloyd_partials` scan, then a merge of ≤ M·k
+    cells — the per-step driver pull is bounded at any corpus size;
+    Lloyd's per-step corpus scan is inherent), then the exact
+    floor-mean update of the module header in Python ints; an empty
+    cell keeps its previous centroid. Returns ``(books, objectives)``:
+    books[s] is the codebook after s steps (books[0] = the sorted
+    init) and objectives[s][m] the corpus Σ of min squared distance
+    to books[s] in subspace m. Step s's own assignment yields it, so
+    no extra scan runs; the final codebook's objective needs one more
+    step."""
+    cur = sorted(init)
+    n_m = max(len({m for m, _, _ in cur}), 1)
+    # the merges key cells by LABEL while the numpy argmin indexes the
+    # codebook by POSITION — they coincide only when codes are dense
+    # 0..k-1 in every subspace (r11 advice: assert the density instead
+    # of assuming it; an id gap in the init rows would otherwise
+    # silently misattribute cell updates)
+    if [(m, c) for m, c, _ in cur] != [(m, c) for m in range(n_m) for c in range(k)]:
         raise ValueError(
-            f"coarse init ids must be dense 0..{k_coarse - 1}, got "
-            f"{[c for c, _ in cur]}"
+            f"Lloyd init codes must be dense 0..{k - 1} in every subspace, "
+            f"got {sorted({c for _, c, _ in cur})}"
         )
-    steps = [cur]
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    merge = _merge_cells if cores > _DRIVER_MERGE_MAX_CORES else _merge_driver
+    books, objectives = [cur], []
     for _ in range(n_steps):
-        stats = _coarse_partials(e, cur, dim)
+        stats = merge(_lloyd_partials(df, col, cur))
+        objectives.append(
+            [sum(v[1] for (m, _), v in stats.items() if m == mi) for mi in range(n_m)]
+        )
         nxt = []
-        for label, vec in cur:
-            hit = stats.get(label)
-            if hit is None:
-                nxt.append((label, list(vec)))
-            else:
-                cnt, sums = hit
-                nxt.append((label, _floor_mean_ints(cnt, sums, off)))
-        steps.append(nxt)
+        for m, c, vec in cur:
+            hit = stats.get((m, c))
+            nxt.append((m, c, vec if hit is None else _floor_mean_ints(hit[0], hit[2])))
+        books.append(nxt)
         cur = nxt
-    return steps
-
-
-def train_coarse_quantizer(
-    e: DataFrame,
-    k_coarse: int,
-    n_steps: int,
-    off: int = TRAIN_OFFSET,
-    dim: int = 64,
-) -> list[DataFrame]:
-    """Lloyd-train the coarse quantizer on integer-grid vectors
-    ``e(id, xs)`` of length ``dim``; returns the centroid table
-    (c0, cvec) AFTER each step, index 0 = the lowest-id init. Each
-    step is one corpus scan + one bounded collect (see
-    :func:`_train_coarse_lists`); the returned tables are literal
-    local relations, value-identical to the former checkpoint chain."""
-    spark = e.sparkSession
-    return [
-        spark.createDataFrame(step, "c0 long, cvec array<long>")
-        for step in _train_coarse_lists(e, k_coarse, n_steps, off, dim)
-    ]
-
-
-def _train_pq_lists(
-    resid: DataFrame,
-    k: int,
-    n_subspaces: int,
-    sub: int,
-    k_coarse: int,
-    n_steps: int,
-    off: int,
-) -> list:
-    """PQ-codebook twin of :func:`_train_coarse_lists`: per step ONE
-    job (residual scan → per-subspace argmin vs the literal nested
-    codebook → groupBy(m, code) with sub+1 aggregate cells → collect
-    of ≤ M·k rows), exact Python integer mean update, empty cells keep
-    their previous centroid. Returns [(m, code, cvec)] AFTER each
-    step, index 0 = the next-k-ids init."""
-    init_rows = (
-        resid.where((F.col("id") >= k_coarse) & (F.col("id") < k_coarse + k))
-        .select((F.col("id") - k_coarse).alias("code"), "r")
-        .collect()
-    )
-    cur = []
-    for r in sorted(init_rows, key=lambda r: int(r["code"])):
-        code = int(r["code"])
-        rv = [int(x) for x in r["r"]]
-        for m in range(n_subspaces):
-            cur.append((m, code, rv[m * sub : (m + 1) * sub]))
-    cur.sort(key=lambda entry: (entry[0], entry[1]))
-    # same density requirement as the coarse init (labels are array
-    # positions in the numpy argmin): codes must be dense 0..k-1 in
-    # every subspace
-    codes = sorted({c for _, c, _ in cur})
-    if codes != list(range(k)):
-        raise ValueError(f"pq init codes must be dense 0..{k - 1}, got {codes}")
-    steps = [cur]
-    for _ in range(n_steps):
-        stats = _pq_partials(resid, cur, n_subspaces, sub)
-        nxt = []
-        for m, code, vec in cur:
-            hit = stats.get((m, code))
-            if hit is None:
-                nxt.append((m, code, list(vec)))
-            else:
-                cnt, sums = hit
-                nxt.append((m, code, _floor_mean_ints(cnt, sums, off)))
-        steps.append(nxt)
-        cur = nxt
-    return steps
+    return books, objectives
 
 
 def _int_corpus(
@@ -1348,24 +1188,23 @@ def ivf_pq_trained_topk(
     squared L2 in the scaled domain — divide by scale² for the float
     reading).
 
-    Scale shape: n_steps+1 corpus scans for coarse training +
-    n_steps+1 for PQ training (each a broadcast-argmin projection plus
-    a mean aggregate bounded at k·dim rows per task — Lloyd's inherent
-    per-iteration cost), then the search touches codes only with the
-    n_queries·nprobe·M·k distance table broadcast. Codebooks are
-    lazily localCheckpoint-ed per step, keeping the plan linear in
-    n_steps and pinning ONE materialization per step (the r6
-    range-partitioner lesson).
+    Scale shape: per level, one init collect plus n_steps corpus scans
+    (:func:`_lloyd` — each an Arrow argmin emitting ≤ M·k partial cells
+    per partition, Lloyd's inherent per-iteration cost), then the
+    search touches codes only with the n_queries·nprobe·M·k distance
+    table broadcast. Between steps the codebooks are driver-side lists;
+    the final ones enter the plan as single-row local relations, so
+    the plan holds no per-step codebook chain.
     """
     sub = dim // n_subspaces
     e = _int_corpus(emb, id_col, vec_col, scale)
     spark = e.sparkSession
-    cent = _train_coarse_lists(e, k_coarse, n_steps, TRAIN_OFFSET, dim)[-1]
+    cents, _ = _lloyd(e, "xs", _init_book(e, "xs", 0, k_coarse, 1), k_coarse, n_steps)
     # the trained codebooks come back as SINGLE-ROW LOCAL relations
     # (bounded driver pulls, k·dim ints): the cross joins below keep
     # the original broadcast shape, but the broadcast now collects
     # from a LocalTableScan — no upstream job, no checkpoint chain
-    crow = _ccs_local(spark, cent)
+    crow = _ccs_local(spark, cents[-1])
     # Residuals materialize ONCE (r12): five consumers read this table
     # — the PQ init collect, the three per-step Arrow scans, and the
     # final codes projection — and each used to re-run the coarse
@@ -1377,9 +1216,10 @@ def ivf_pq_trained_topk(
     # against n_steps+1 recomputes of the assign projection — the
     # scans themselves are inherent to Lloyd either way.
     resid = _residuals(e, crow, k_coarse).localCheckpoint(eager=True)
-    cb = _train_pq_lists(resid, k, n_subspaces, sub, k_coarse, n_steps, TRAIN_OFFSET)[
-        -1
-    ]
+    cbs, _ = _lloyd(
+        resid, "r", _init_book(resid, "r", k_coarse, k, n_subspaces), k, n_steps
+    )
+    cb = cbs[-1]
     # ---- final codes vs the trained residual codebook ----
     codes = (
         resid.crossJoin(F.broadcast(_mm_local(spark, cb)))
@@ -1465,98 +1305,3 @@ def ivf_pq_trained_topk(
             "rank",
         )
     )
-
-
-def ivf_pq_train_objectives(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_subspaces: int = 4,
-    k: int = 8,
-    k_coarse: int = 4,
-    dim: int = 64,
-    scale: int = TRAIN_SCALE,
-    n_steps: int = TRAIN_STEPS,
-) -> DataFrame:
-    """Per-step Lloyd objectives for descent attestation: rows
-    (level, m, step, sse) where ``sse`` is the corpus total of the
-    MINIMUM squared integer distance to that step's codebook — coarse
-    level reports m = -1 over full vectors; the pq level reports each
-    subspace m separately. Lloyd guarantees sse is non-increasing in
-    ``step`` for exact means; the ×10⁴ floor-division grid perturbs
-    each mean by < 1 grid unit per component, preserving descent at
-    the magnitudes the corpus spans (test-pinned)."""
-    sub = dim // n_subspaces
-    e = _int_corpus(emb, id_col, vec_col, scale)
-    spark = e.sparkSession
-    cents = _train_coarse_lists(e, k_coarse, n_steps, TRAIN_OFFSET, dim)
-    parts = []
-    for step, cent in enumerate(cents):
-        parts.append(
-            e.crossJoin(F.broadcast(_ccs_local(spark, cent)))
-            .select(F.array_min(_coarse_cands(k_coarse)).d.alias("d"))
-            .groupBy()
-            # corpus-wide sum of BIGINT squared distances: per-row d
-            # reaches ~1e10, so a raw long sum overflows around 1e9
-            # rows (r11 review) — accumulate in DECIMAL(38,0), read
-            # out as long (loud ANSI cast if the total ever exceeds it)
-            .agg(
-                F.sum(F.col("d").cast("decimal(38,0)"))
-                .cast("long")
-                .alias("sse")
-            )
-            .select(
-                F.lit("coarse").alias("level"),
-                F.lit(-1).cast("long").alias("m"),
-                F.lit(step).alias("step"),
-                "sse",
-            )
-        )
-    crow = _ccs_local(spark, cents[-1])
-    # local-relation residual projection, materialized once across its
-    # n_steps+1 training scans AND the per-step SSE parts (same
-    # rationale as ivf_pq_trained_topk's checkpoint)
-    resid = _residuals(e, crow, k_coarse).localCheckpoint(eager=True)
-    cbs = _train_pq_lists(resid, k, n_subspaces, sub, k_coarse, n_steps, TRAIN_OFFSET)
-    for step, cb in enumerate(cbs):
-        parts.append(
-            resid.crossJoin(F.broadcast(_mm_local(spark, cb)))
-            .select(
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_subspaces - 1))
-                ).alias("mi"),
-                "r",
-                "mm",
-            )
-            .select(
-                F.col("mi").cast("long").alias("m"),
-                F.array_min(
-                    _pq_cands(
-                        F.slice(
-                            F.col("r"),
-                            (F.col("mi") * sub + 1).cast("int"),
-                            sub,
-                        ),
-                        F.col("mi"),
-                        k,
-                    )
-                ).d.alias("d"),
-            )
-            .groupBy("m")
-            # same DECIMAL(38,0) accumulation as the coarse level
-            .agg(
-                F.sum(F.col("d").cast("decimal(38,0)"))
-                .cast("long")
-                .alias("sse")
-            )
-            .select(
-                F.lit("pq").alias("level"),
-                "m",
-                F.lit(step).alias("step"),
-                "sse",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

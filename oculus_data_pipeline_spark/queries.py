@@ -7126,8 +7126,8 @@ def _ivf_pq_trained_oracle(
     # OutOfMemory at n_steps=3). MATERIALIZED (emitted directly in each
     # CTE header above — a post-hoc regex rewrite of the joined text
     # would mangle any future non-CTE '<word> AS (' token; r8 advice)
-    # pins the linear chain — the oracle-side analogue of the Spark
-    # plan's per-step lazy localCheckpoints.
+    # pins the linear chain. The Spark side has no such chain: it keeps
+    # each step's codebook as a driver-side list.
     return "".join(parts)
 
 
@@ -7142,9 +7142,10 @@ def q168_ivf_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-negative numerator), distances are BIGINT folds with id
     tie-breaks — so N iterations stay cross-engine bit-exact with no
     DECIMAL depth growth, then q149's probed ADC search runs against
-    the trained index. Per-step descent is attested per subspace
-    (ivf_pq_train_objectives, tests/test_ivf_kmeans.py). ``adc_dist``
-    is squared L2 in the scaled integer domain (÷10⁸ for floats)."""
+    the trained index. Per-step descent is attested per subspace from
+    the objectives the trainer's own assignments compute
+    (quantize._lloyd, tests/test_ivf_kmeans.py). ``adc_dist`` is
+    squared L2 in the scaled integer domain (÷10⁸ for floats)."""
     from .operators.quantize import ivf_pq_trained_topk
 
     return ivf_pq_trained_topk(load_table(spark, sf_dir, "embeddings"))

@@ -102,9 +102,22 @@ def _fanout(spark: SparkSession, df: DataFrame, name: str, path: str) -> DataFra
     return df.repartition(n, F.col(FANOUT_KEYS[name]))
 
 
-def _normalize_timestamps(df: DataFrame) -> DataFrame:
-    """Cast TIMESTAMP_NTZ columns to session-time TIMESTAMP (session tz is
-    pinned to UTC, so wall-clock values are unchanged).
+def _read_raw(spark: SparkSession, name: str, path: str) -> DataFrame:
+    """Batch-read one table's parquet as stored. events.ts has been
+    parquet TIMESTAMP(NANOS) in some driver generations, which Spark's
+    reader rejects, so events is read with nanos as long (converted by
+    :func:`_normalize_timestamps`)."""
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
+
+
+def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """The engine's timestamp contract, for batch and streaming reads
+    alike. A nanos-as-long events.ts is integer-divided to micros
+    (double division would lose precision at ~1.7e18 ns). TIMESTAMP_NTZ
+    columns are cast to session-time TIMESTAMP (session tz is pinned to
+    UTC, so wall-clock values are unchanged).
 
     The driver's parquet carries timestamps without UTC adjustment, which
     Spark 4 reads as TIMESTAMP_NTZ; NTZ forbids direct numeric casts
@@ -114,6 +127,8 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     if not ntz:
         return df
@@ -185,20 +200,7 @@ def load_table(
 def _load_table_uncached(
     spark: SparkSession, sf_dir: str, name: str, path: str, fanout: bool
 ) -> DataFrame:
-    if name == "events":
-        # events.ts has been parquet TIMESTAMP(NANOS) in some driver
-        # generations, which Spark's reader rejects. Read nanos as long,
-        # then integer-divide to micros (double division would lose
-        # precision at ~1.7e18 ns).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    df = _normalize_timestamps(df)
+    df = _normalize_timestamps(_read_raw(spark, name, path), name)
     return _fanout(spark, df, name, path) if fanout else df
 
 

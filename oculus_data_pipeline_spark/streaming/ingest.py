@@ -11,39 +11,37 @@ distinct→anti-join→infer shape) is shared verbatim between modes.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.classify import Classifier
 from ..plans.pipeline import DOCUMENT_XML_SCHEMA, _canonical_documents, graph_from_documents
 from ..sinks.graph_sink import merge_graph
+from ..sources.tables import _normalize_timestamps, _read_raw
 
-def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of the events table.
 
-    The driver's parquet has shipped ``ts`` as either TIMESTAMP(NANOS)
-    (readable only as int64 via the nanosAsLong legacy flag) or plain
-    TIMESTAMP_NTZ micros, depending on generation. A streaming file
-    source needs an explicit schema, so probe the footer with a batch
-    read (metadata-only) and normalize either encoding to session-time
-    TIMESTAMP — same contract as sources/tables.load_table.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.parquet(path)
-    ts_type = dict(probe.dtypes).get("ts")
+def _parquet_stream(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """File-source stream of table ``name`` at ``path`` (one parquet
+    file, or a glob of them), one file per trigger. A streaming file
+    source needs an explicit schema, so the footer is probed with a
+    batch read (metadata-only); the stream then gets load_table's
+    timestamp normalization."""
+    probe = _read_raw(spark, name, path)
     reader = spark.readStream.schema(probe.schema).option("maxFilesPerTrigger", 1)
     if path.endswith(".parquet"):
-        # file source wants a directory; select the one file via glob
-        import os
-
+        # file source wants a directory; select the file(s) via glob
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    df = reader.parquet(path)
-    if ts_type == "bigint":  # nanos-as-long → integer-divide to micros
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return _normalize_timestamps(reader.parquet(path), name)
+
+
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream of the events table. The driver's parquet has
+    shipped ``ts`` as either TIMESTAMP(NANOS) or plain TIMESTAMP_NTZ
+    micros, depending on generation; both stream as session-time
+    TIMESTAMP — the contract of sources/tables.load_table."""
+    return _parquet_stream(spark, path, "events")
 
 
 def read_xml_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -99,17 +97,9 @@ def stream_pipeline_to_graph(
 
 
 def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of the documents table (schema probed from
-    the parquet footer, same normalization contract as load_table).
-    Stateless curation operators (PII scrub, quality scoring, lang-id,
-    chunking) are narrow maps, so the SAME batch Column expressions
-    run unchanged on this stream — pinned by the batch/stream parity
-    tests."""
-    probe = spark.read.parquet(path)
-    reader = spark.readStream.schema(probe.schema).option("maxFilesPerTrigger", 1)
-    if path.endswith(".parquet"):
-        import os
-
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    return reader.parquet(path)
+    """File-source stream of the documents table (same probe and
+    normalization contract as load_table). Stateless curation operators
+    (PII scrub, quality scoring, lang-id, chunking) are narrow maps, so
+    the SAME batch Column expressions run unchanged on this stream —
+    pinned by the batch/stream parity tests."""
+    return _parquet_stream(spark, path, "documents")

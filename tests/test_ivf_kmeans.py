@@ -115,6 +115,22 @@ def test_ivf_auto_codebook_size(spark, sf_dir):
         assert len({r["neighbor_id"] for r in rs}) == len(rs)
 
 
+def _train_coarse(spark, sf_dir, n_steps):
+    """q168's coarse level (k_coarse = 4 over the integer-grid corpus)
+    through the one Lloyd trainer: returns (corpus, books, objectives)."""
+    from oculus_data_pipeline_spark.operators.quantize import (
+        TRAIN_SCALE,
+        _init_book,
+        _int_corpus,
+        _lloyd,
+    )
+
+    e = _int_corpus(load_table(spark, sf_dir, "embeddings"),
+                    "vec_id", "embedding", TRAIN_SCALE)
+    books, objectives = _lloyd(e, "xs", _init_book(e, "xs", 0, 4, 1), 4, n_steps)
+    return e, books, objectives
+
+
 def test_ivf_pq_training_descends_per_step(spark, sf_dir):
     """Per-step Lloyd descent attestation for q168's 3-step
     integer-grid training (r7 verdict item 1): the corpus SSE against
@@ -123,16 +139,29 @@ def test_ivf_pq_training_descends_per_step(spark, sf_dir):
     strictly improves on the raw lowest-id init. Exact means give
     Lloyd's monotonicity guarantee; the ×10⁴ floor-division grid
     perturbs each mean by < 1 grid unit per component — this test pins
-    that the perturbation never breaks descent on the shipped data."""
+    that the perturbation never breaks descent on the shipped data.
+    The trainer reports step s's objective against codebook s, so 4
+    steps give the objectives of codebooks 0-3 (init + q168's 3)."""
     from oculus_data_pipeline_spark.operators.quantize import (
-        ivf_pq_train_objectives,
+        _ccs_local,
+        _init_book,
+        _lloyd,
+        _residuals,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = ivf_pq_train_objectives(emb).collect()
-    series: dict[tuple, dict[int, int]] = {}
-    for r in rows:
-        series.setdefault((r.level, r.m), {})[r.step] = r.sse
+    e, cents, coarse_obj = _train_coarse(spark, sf_dir, n_steps=4)
+    # the PQ level trains on residuals vs the 3-step coarse codebook,
+    # as q168 does
+    resid = _residuals(e, _ccs_local(spark, cents[3]), 4).localCheckpoint(
+        eager=True
+    )
+    _, pq_obj = _lloyd(resid, "r", _init_book(resid, "r", 4, 8, 4), 8, 4)
+    series: dict[tuple, dict[int, int]] = {
+        ("coarse", -1): {s: obj[0] for s, obj in enumerate(coarse_obj)}
+    }
+    for s, obj in enumerate(pq_obj):
+        for m, sse in enumerate(obj):
+            series.setdefault(("pq", m), {})[s] = sse
     assert ("coarse", -1) in series
     assert sorted(m for lvl, m in series if lvl == "pq") == [0, 1, 2, 3]
     for key, by_step in series.items():
@@ -149,35 +178,37 @@ def test_ivf_pq_trained_more_steps_never_worsen_the_quantizer(spark, sf_dir):
     monotonicity composed across steps), and the step-3 codebooks
     differ from step-1's on this corpus — the extra iterations DO
     move the quantizer, not just re-run the same fixpoint."""
-    from oculus_data_pipeline_spark.operators.quantize import (
-        _cent_row,
-        _int_corpus,
-        train_coarse_quantizer,
-    )
+    from oculus_data_pipeline_spark.operators.quantize import _ccs_local
 
-    e = _int_corpus(load_table(spark, sf_dir, "embeddings"),
-                    "vec_id", "embedding", 10_000)
-    cents = train_coarse_quantizer(e, k_coarse=4, n_steps=3)
-    step1 = {(r.c0, tuple(r.cvec)) for r in cents[1].collect()}
-    step3 = {(r.c0, tuple(r.cvec)) for r in cents[3].collect()}
+    _, cents, objectives = _train_coarse(spark, sf_dir, n_steps=4)
+    step1 = {(c, tuple(v)) for _, c, v in cents[1]}
+    step3 = {(c, tuple(v)) for _, c, v in cents[3]}
     assert step1 != step3
     # both rows remain broadcastable single-row codebooks
-    assert _cent_row(cents[3]).count() == 1
+    assert _ccs_local(spark, cents[3]).count() == 1
     # ...and the named guarantee is ASSERTED, not implied: the step-3
     # coarse objective is no worse than step 1's (r8 review finding —
     # the per-step descent test covers this only transitively)
-    from oculus_data_pipeline_spark.operators.quantize import (
-        ivf_pq_train_objectives,
-    )
-
-    coarse = {
-        r.step: r.sse
-        for r in ivf_pq_train_objectives(
-            load_table(spark, sf_dir, "embeddings")
-        ).collect()
-        if r.level == "coarse"
-    }
+    coarse = {s: obj[0] for s, obj in enumerate(objectives)}
     assert coarse[3] <= coarse[1], coarse
+
+
+def test_ivf_pq_trained_rejects_sparse_init_ids(spark, sf_dir):
+    """Both Lloyd levels take their init from a dense id range — the
+    coarse codebook from ids [0, k_coarse), the PQ codebook from
+    [k_coarse, k_coarse + k) — and the trainer indexes codes by array
+    position while merging cells by label. A gap in either range must
+    fail loudly at build time instead of silently misattributing
+    cell updates."""
+    from oculus_data_pipeline_spark.operators.quantize import ivf_pq_trained_topk
+
+    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 200)
+    k_coarse, k = 4, 8
+    for missing in (2, k_coarse + k - 1):  # coarse init id, PQ init id
+        with pytest.raises(ValueError, match="dense"):
+            ivf_pq_trained_topk(
+                emb.where(F.col("vec_id") != missing), k=k, k_coarse=k_coarse
+            )
 
 
 def test_train_grid_offset_bounds_corpus(spark, sf_dir, emb_np):

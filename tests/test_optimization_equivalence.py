@@ -77,12 +77,13 @@ def test_div_trunc_matches_spark_div(spark):
 def test_coarse_partials_match_decimal_aggregation(spark):
     """The Arrow partial-sum trainer must reproduce the exact
     DECIMAL(38,0) per-cluster sums, counts, and first-occurrence
-    argmin tie-break of the SQL form it replaced."""
+    argmin tie-break of the SQL form it replaced — here the coarse
+    level, ONE subspace of the full width."""
     from oculus_data_pipeline_spark.operators.quantize import (
-        _coarse_partials,
+        _lloyd_partials,
+        _merge_driver,
     )
 
-    dim = 4
     # include a tie: row (7) is equidistant to centroids 0 and 1 ->
     # must land in cluster 0 (lowest cid)
     rows = [
@@ -93,30 +94,34 @@ def test_coarse_partials_match_decimal_aggregation(spark):
         (7, [5, 5, 5, 5]),
     ]
     e = spark.createDataFrame(rows, "id long, xs array<long>")
-    cents = [(0, [0, 0, 0, 0]), (1, [10, 10, 10, 10])]
-    stats = _coarse_partials(e, cents, dim)
-    # SQL reference: argmin + decimal sums
-    assert stats[0][0] == 3  # ids 0, 2, 7
-    assert stats[0][1] == [6, 5, 5, 5]
-    assert stats[1][0] == 2  # ids 1, 3
-    assert stats[1][1] == [19, 20, 20, 20]
+    cents = [(0, 0, [0, 0, 0, 0]), (0, 1, [10, 10, 10, 10])]
+    stats = _merge_driver(_lloyd_partials(e, "xs", cents))
+    # SQL reference: argmin + decimal sums; sse = Σ min squared distance
+    assert stats[(0, 0)] == (3, 0 + 1 + 100, [6, 5, 5, 5])  # ids 0, 2, 7
+    assert stats[(0, 1)] == (2, 0 + 1, [19, 20, 20, 20])  # ids 1, 3
 
 
 def test_spark_merge_partials_bit_identical(spark):
-    """The scale path (partials pre-merged IN SPARK before the collect
-    — r12, verdict item 5) must return exactly the driver-merge dict:
-    same keys, same counts, same per-component integer sums. Forced on
-    via the session conf so the local[?] gate doesn't decide."""
+    """The scale path (partials merged IN SPARK before the collect —
+    r12, verdict item 5) must return exactly the driver-merge dict for
+    the same partials frame: same keys, same counts, same objectives,
+    same per-component integer sums — and both must drop a codebook
+    cell no row maps to."""
     from oculus_data_pipeline_spark.operators.quantize import (
-        _SPARK_MERGE_CONF,
-        _coarse_partials,
-        _pq_partials,
+        _lloyd_partials,
+        _merge_cells,
+        _merge_driver,
     )
 
-    dim = 4
     rows = [(i, [int(x) for x in (i % 11, -i, 3 * i, 7 - i)]) for i in range(50)]
     e = spark.createDataFrame(rows, "id long, xs array<long>").repartition(7)
-    cents = [(0, [0, 0, 0, 0]), (1, [10, -40, 120, -30]), (2, [5, -20, 60, -10])]
+    # code 3 sits far from every row: an empty cell
+    cents = [
+        (0, 0, [0, 0, 0, 0]),
+        (0, 1, [10, -40, 120, -30]),
+        (0, 2, [5, -20, 60, -10]),
+        (0, 3, [10**6, 10**6, 10**6, 10**6]),
+    ]
     resid = spark.createDataFrame(
         [(i, 0, v + v) for i, v in rows], "id long, list_id long, r array<long>"
     ).repartition(5)
@@ -126,28 +131,27 @@ def test_spark_merge_partials_bit_identical(spark):
         (1, 0, [100, -40]),
         (1, 1, [2, 5]),
     ]
-    try:
-        spark.conf.set(_SPARK_MERGE_CONF, "false")
-        want_c = _coarse_partials(e, cents, dim)
-        want_p = _pq_partials(resid, cb, 2, 2)
-        spark.conf.set(_SPARK_MERGE_CONF, "true")
-        got_c = _coarse_partials(e, cents, dim)
-        got_p = _pq_partials(resid, cb, 2, 2)
-    finally:
-        spark.conf.unset(_SPARK_MERGE_CONF)
-    assert got_c == want_c
-    assert got_p == want_p
+    for part in (_lloyd_partials(e, "xs", cents), _lloyd_partials(resid, "r", cb)):
+        want = _merge_driver(part)
+        got = _merge_cells(part)
+        assert got == want
+        assert sum(cnt for cnt, _, _ in want.values()) == len(rows) * (
+            1 + max(m for m, _ in want)
+        )
+        assert any(sse > 0 for _, sse, _ in want.values())
+        assert (0, 3) not in want  # the empty cell, dropped by both
 
 
 def test_pq_partials_empty_cell_keeps_previous(spark):
     """A codebook cell no residual maps to must be absent from the
     partials (the trainer then keeps the previous centroid), exactly
-    like the missing-group left join of the SQL form."""
+    like the missing-group left join of the SQL form — here with TWO
+    subspaces."""
     from oculus_data_pipeline_spark.operators.quantize import (
-        _pq_partials,
+        _lloyd_partials,
+        _merge_driver,
     )
 
-    sub, m = 2, 2
     resid = spark.createDataFrame(
         [(1, 0, [0, 0, 5, 5]), (2, 0, [1, 1, 5, 5])],
         "id long, list_id long, r array<long>",
@@ -160,9 +164,9 @@ def test_pq_partials_empty_cell_keeps_previous(spark):
         (1, 0, [5, 5]),
         (1, 1, [90, 90]),
     ]
-    stats = _pq_partials(resid, cb, m, sub)
-    assert stats[(0, 0)] == (2, [1, 1])
-    assert stats[(1, 0)] == (2, [10, 10])
+    stats = _merge_driver(_lloyd_partials(resid, "r", cb))
+    assert stats[(0, 0)] == (2, 0 + 2, [1, 1])
+    assert stats[(1, 0)] == (2, 0, [10, 10])
     assert (0, 1) not in stats and (1, 1) not in stats
 
 
