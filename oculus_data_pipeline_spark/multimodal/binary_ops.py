@@ -8,15 +8,13 @@ shapes — is real and tested. Codec status:
   reads width/height/format straight from PNG/GIF/BMP/JPEG container
   bytes (the formats put dimensions in fixed header positions — no
   codec library needed). Full pixel decode would need PIL/opencv
-  (absent here); ``fake=True`` keeps the deterministic stand-in for
-  exercising the plumbing with non-image payloads.
+  (absent here).
 - ``decode_videos`` / ``frame_sample_video`` are REAL at the demux
   level: a pure-Python walk of animated-GIF block structure or AVI
   RIFF chunks yields dimensions, frame count, per-frame timing and
   per-frame payload spans — sampling hashes compressed frame bytes
   without decoding pixels.  Pixel-level decode would need a codec
-  library (absent here); ``fake=True`` keeps a test-only stand-in
-  for exercising the row-expansion plumbing with arbitrary bytes.
+  library (absent here).
 
 Scale design: binary payloads stay in executor memory only for the
 duration of one Arrow batch (bounded by
@@ -78,7 +76,7 @@ def make_media_table(docs: DataFrame, kind: str = "image") -> DataFrame:
     )
 
 
-def extract_image_features(media: DataFrame, repartition: int | None = None) -> DataFrame:
+def extract_image_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary content.
 
     Deterministic: features are derived from the sha256 of the bytes
@@ -86,8 +84,6 @@ def extract_image_features(media: DataFrame, repartition: int | None = None) -> 
     dataflow shape as a real embedding model (bytes in → fixed-width
     vector out). Fully distributed; nothing touches the driver.
     """
-    if repartition:
-        media = media.repartition(repartition, "media_id")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # zip over columns, not iterrows(): iterrows materializes a
@@ -247,18 +243,16 @@ def make_image_table(docs: DataFrame) -> DataFrame:
     return sized.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
-def decode_images(media: DataFrame, fake: bool = False) -> DataFrame:
+def decode_images(media: DataFrame) -> DataFrame:
     """Decode binary image content to (width, height, pixel_format).
 
-    Real path: pure-Python header parse (parse_image_header) — PNG,
+    Pure-Python header parse (parse_image_header) — PNG,
     GIF, BMP and JPEG dimensions come straight off the container bytes
     with no codec library. Unrecognized content yields decoded_ok =
     False with null metadata (a real pipeline quarantines those rows).
-    ``fake=True`` keeps the deterministic content-hash stand-in for
-    plumbing tests over non-image payloads.
     """
 
-    def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
             for mid, raw in zip(pdf["media_id"], pdf["content"]):
@@ -275,24 +269,7 @@ def decode_images(media: DataFrame, fake: bool = False) -> DataFrame:
                 )
             yield pd.DataFrame(out)
 
-    def fake_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(raw) if raw is not None else b""
-                h = int(hashlib.sha256(content).hexdigest()[:8], 16)
-                out.append(
-                    {
-                        "media_id": mid,
-                        "width": 64 + h % 1920,
-                        "height": 64 + (h // 1920) % 1080,
-                        "pixel_format": "rgb24",
-                        "decoded_ok": len(content) > 0,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(fake_batches if fake else real_batches, schema=DECODED_SCHEMA)
+    return media.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
 VIDEO_DECODED_SCHEMA = (
@@ -513,25 +490,22 @@ def decode_videos(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=VIDEO_DECODED_SCHEMA)
 
 
-def frame_sample_video(
-    media: DataFrame, every_ms: int = 500, fake: bool = False
-) -> DataFrame:
+def frame_sample_video(media: DataFrame, every_ms: int = 500) -> DataFrame:
     """Sample frames from video content at a fixed period → one row per
     sample (media_id, frame_idx, ts_ms, frame_sha).
 
-    Real path (default): demux-level — parse_video_container yields
-    frame timing and per-frame payload spans; the sampler picks the
+    Demux-level: parse_video_container yields frame timing and
+    per-frame payload spans; the sampler picks the
     frame on screen at each ts from the container's OWN frame-start
     schedule (cumulative GCE delays for GIF — real files vary delay
     frame to frame, so a uniform duration/n_frames assumption picks
     the wrong frame, r10 review; uniform avih grid for AVI) and hashes
     that frame's compressed bytes, never decoding pixels.  Unparsable
     content contributes no rows (quarantine upstream via
-    decode_videos).  ``fake=True`` is a test-only plumbing stand-in
-    for non-video payloads (1 ms/byte)."""
+    decode_videos)."""
     from bisect import bisect_right
 
-    def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["media_id", "frame_idx", "ts_ms", "frame_sha"]
         for pdf in it:
             out = []
@@ -557,30 +531,8 @@ def frame_sample_video(
                     )
             yield pd.DataFrame(out, columns=cols)
 
-    def fake_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "frame_idx", "ts_ms", "frame_sha"]
-        for pdf in it:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(raw) if raw is not None else b""
-                duration = len(content)  # fake duration: 1 ms per byte
-                for i, ts in enumerate(range(0, duration, every_ms)):
-                    frame_sha = hashlib.sha256(
-                        content + ts.to_bytes(8, "little")
-                    ).hexdigest()[:16]
-                    out.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": i,
-                            "ts_ms": ts,
-                            "frame_sha": frame_sha,
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols)
-
     return media.mapInPandas(
-        fake_batches if fake else real_batches,
-        schema="media_id long, frame_idx int, ts_ms long, frame_sha string",
+        batches, schema="media_id long, frame_idx int, ts_ms long, frame_sha string"
     )
 
 

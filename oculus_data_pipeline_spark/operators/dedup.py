@@ -27,7 +27,7 @@ those; the rest are north-star additions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import affine_hash, md5_int, minhash_params
@@ -92,7 +92,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    prefix_filter: bool = False,
     max_df: int | None = 5,
 ) -> DataFrame:
     """EXACT near-duplicate pairs by word-n-gram Jaccard ≥ threshold.
@@ -104,21 +103,12 @@ def ngram_jaccard_pairs(
     8× data on this testdata where the guarded plan reads 0.9×).
     Nobody gets the quadratic plan by accident.
 
-    Default path: inverted-index self-join on the 48-bit shingle hash
+    Plan: inverted-index self-join on the 48-bit shingle hash
     (int join keys: ~3-4× fewer shuffle bytes than the shingle
     strings), counting |∩| directly from the join output with map-side
     partial aggregation — one pass, no candidate materialization.
-
-    ``prefix_filter=True`` switches to AllPairs-style lossless prefix
-    pruning (docs' shingles ordered rarest-first; a qualifying pair
-    must collide within each side's first |d| − ⌈t·|d|⌉ + 1 shingles).
-    That wins on Zipfian vocabularies where rare shingles prune most
-    pairs; on this testdata's adversarially uniform 35-word vocabulary
-    it LOSES (measured 74× vs 35× at 8× data — every shingle is hot,
-    so the filter pays its overhead and prunes nothing). Both paths
-    return identical results; web-scale low-threshold dedup should use
-    MinHash-LSH (minhash_candidate_pairs) instead, which measures
-    sub-linear here.
+    Web-scale low-threshold dedup should use MinHash-LSH
+    (minhash_candidate_pairs) instead, which measures sub-linear here.
 
     ``max_df`` is the stop-shingle skew guard: shingles appearing in
     more than ``max_df`` documents are dropped from BOTH the
@@ -141,52 +131,14 @@ def ngram_jaccard_pairs(
         sh = sh.join(hot.where(F.col("df") <= max_df), "sh").select("id", "sh")
     sh = sh.persist()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    if not prefix_filter:
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count("*").alias("n_inter"))
-        )
-        inter = (
-            inter.join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), "id_a")
-            .join(sizes.withColumnsRenamed({"id": "id_b", "n_sh": "n_b"}), "id_b")
-        )
-    else:
-        freq = sh.groupBy("sh").agg(F.count("*").alias("df"))
-        w_rank = W.partitionBy("id").orderBy(F.asc("df"), F.asc("sh"))
-        ranked = sh.join(freq, "sh").select(
-            "id",
-            "sh",
-            F.row_number().over(w_rank).alias("pos"),
-            F.count("*").over(W.partitionBy("id")).alias("n_sh"),
-        )
-        prefix = ranked.where(
-            F.col("pos")
-            <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-        ).select("id", "sh", "n_sh").persist()
-        pa, pb = prefix.alias("a"), prefix.alias("b")
-        cand = (
-            pa.join(
-                pb,
-                (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.n_sh").alias("n_a"),
-                F.col("b.n_sh").alias("n_b"),
-            )
-            .distinct()
-        )
-        sa = sh.withColumnsRenamed({"id": "id_a"})
-        sb = sh.withColumnsRenamed({"id": "id_b"})
-        inter = (
-            cand.join(sa, "id_a")
-            .join(sb, ["id_b", "sh"])
-            .groupBy("id_a", "id_b", "n_a", "n_b")
-            .agg(F.count("*").alias("n_inter"))
-        )
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count("*").alias("n_inter"))
+        .join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), "id_a")
+        .join(sizes.withColumnsRenamed({"id": "id_b", "n_sh": "n_b"}), "id_b")
+    )
     return (
         inter.withColumn(
             "jaccard",

@@ -21,6 +21,10 @@ Each query callable takes (spark, sf_dir) and returns a DataFrame.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -11792,99 +11796,53 @@ def q220_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Driver-attestation ordering: the external correctness driver checks
-# the FIRST 50 registered queries each round. Cumulative state after
-# round 10 (CORRECTNESS_r01-r10 union, verified by the r10 judge):
-# ALL 220 registry queries driver-attested, 218 latest-full-green,
-# q46/q85 rows-only BY DESIGN (closed-form companions q134/q135 full
-# green), zero failing rows, staleness floor r5 (21 rows last green
-# in r5 — displaced two rounds running by changed-path slots).
-#
-# The ROUND-12 window (registry FROZEN at 220 for the eighth round)
-# closes the r11 verdict's attestation-hygiene item: the r11 window
-# was frozen BEFORE the round's optimization commits, so the heavy
-# rewrites (fanout, per-row norms, Arrow Lloyd steps, CC round
-# fusion) shipped with local-suite oracle evidence only. This window
-# leads with exactly the paths the r11 verdict names as lacking an
-# r11 driver attestation, PLUS this round's own rewritten paths
-# (q151 single-branch bounds, q209 one-aggregation intersections,
-# the CC window hook's consumers, q161 whose r11 regression-vs-A/B
-# contradiction this round resolves — it was the fanout exchange,
-# not the checkpoint). Remaining slots: the r6-stale cohort, then
-# the oldest r7 rows in tools_attestation_status.py order. Queries
-# past the window keep their prior driver rows and stay covered by
-# tests/ (stricter exact-value compare at both SFs).
-_ATTESTATION_PRIORITY = [
-    # --- 0. round-12 REWRITTEN PATHS not already in the r11
-    # verdict's list (CC window-hook consumers q76/q167; the q209
-    # and q161 shapes this round changed/resolved) ---
-    "q151_winsorized_stats",
-    "q209_kmv_set_ops",
-    "q161_chi_square",
-    "q76_dedup_clusters",
-    "q167_cluster_size_histogram",
-    # --- 1. the r11 verdict's item-1 list verbatim: optimization-
-    # changed heavy paths with no r11 driver attestation ---
-    "q168_ivf_pq_trained",
-    "q97_semantic_clusters",
-    "q112_canonical_docs",
-    "q120_prepare_corpus",
-    "q166_dedup_weights",
-    "q70_curation_pipeline",
-    "q210_drop_waterfall",
-    "q202_mutual_nn_margin",
-    "q193_contrastive_triplets",
-    "q171_minhash_accuracy",
-    "q208_split_leakage",
-    "q50_cosine_topk",
-    "q38_lsh_ann_topk",
-    "q154_hard_negatives",
-    # --- 2. the remaining r6-stale cohort (11 rows, oldest green) ---
-    "q36_rank_with_ties",
-    "q37_window_frames",
-    "q44_rolling_hash",
-    "q46_approx_distinct",
-    "q47_ivf_ann",
-    "q52_pandas_udf_score",
-    "q53_applyinpandas_topk",
-    "q54_stream_dedup_batch",
-    "q56_deterministic_sample",
-    "q57_stratified_sample",
-    "q59_correlated_subquery",
-    # --- 3. the oldest r7-stale rows to fill the window to exactly
-    # 50 (tools_attestation_status.py rotation-seed order; q151/
-    # q202/q38 from that cohort already hold slots above) ---
-    "q105_audio_decode",
-    "q117_group_percentiles",
-    "q118_embedding_decontamination",
-    "q119_lsh_recall_report",
-    "q122_sequence_packing",
-    "q125_interevent_gap_stats",
-    "q144_stratified_split",
-    "q147_approx_percentile_bound",
-    "q159_pps_sample",
-    "q172_weighted_median",
-    "q182_mad_outliers",
-    "q189_embedding_norm_profile",
-    "q190_pack_manifest",
-    "q39_lsh_bucket_stats",
-    "q51_cosine_near_dup_pairs",
-    "q73_ordered_string_agg",
-    "q78_media_features",
-    "q79_from_json_typed",
-    "q80_higher_order_predicates",
-    "q81_forecast_revenue_change",
-]
+# The external correctness driver attests the FIRST 50 queries that
+# get_queries() returns and records each one in CORRECTNESS_r<NN>.json
+# in the repo root. The order is derived from those records, stalest
+# first, so every driver round re-attests what has gone longest
+# without a green row; with no records the order is alphabetical.
+_RECORDS_GLOB = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "CORRECTNESS_r*.json",
+)
 
 
-def _attestation_order(names) -> list[str]:
-    rank = {n: i for i, n in enumerate(_ATTESTATION_PRIORITY)}
-    return sorted(names, key=lambda n: (rank.get(n, len(rank)), n))
+def _load_records() -> dict[int, dict[str, dict]]:
+    """{round number: {query name: driver row}} for every record file."""
+    rounds = {}
+    for path in glob.glob(_RECORDS_GLOB):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if m:
+            with open(path) as f:
+                rounds[int(m.group(1))] = json.load(f)
+    return rounds
+
+
+def _is_green(name: str, row: dict) -> bool:
+    """rows+schema+hash all matched; a query with no oracle can only
+    get the driver's rows-only row (err='no_oracle' plus a row count)."""
+    if name not in ORACLE:
+        return row.get("err") == "no_oracle" and row.get("spark_rows") is not None
+    return bool(
+        row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+    )
+
+
+def _stalest_first(names, rounds: dict[int, dict[str, dict]]) -> list[str]:
+    """Rank 0 for a query whose latest driver row is not green or that
+    has no row; otherwise its latest green round. Oldest first, ties by
+    name."""
+    rank = dict.fromkeys(names, 0)
+    for rno in sorted(rounds):
+        for name, row in rounds[rno].items():
+            if name in rank:
+                rank[name] = rno if _is_green(name, row) else 0
+    return sorted(rank, key=lambda n: (rank[n], n))
 
 
 def get_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: QUERIES[n] for n in _attestation_order(QUERIES)}
+    return {n: QUERIES[n] for n in _stalest_first(QUERIES, _load_records())}
 
 
 def get_oracle_sql() -> dict[str, str]:
-    return {n: ORACLE[n] for n in _attestation_order(ORACLE)}
+    return {n: ORACLE[n] for n in _stalest_first(ORACLE, _load_records())}

@@ -170,19 +170,23 @@ def test_pq_partials_empty_cell_keeps_previous(spark):
     assert (0, 1) not in stats and (1, 1) not in stats
 
 
-def test_fanout_changes_no_rows(spark, sf_dir):
-    from oculus_data_pipeline_spark.sources.tables import load_table
+def test_fanout_changes_no_rows(spark, sf_dir, monkeypatch):
+    from oculus_data_pipeline_spark.sources import tables
 
-    df = load_table(spark, sf_dir, "lineitem", fanout=True)
-    raw = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    assert df.count() == raw.count()
-    # exact multiset equality on the key columns
-    assert (
-        df.select("l_orderkey", "l_linenumber")
-        .exceptAll(raw.select("l_orderkey", "l_linenumber"))
-        .count()
-        == 0
+    # sf0.001's lineitem is below the fanout size floor, where _fanout
+    # returns the bare scan; drop the floor and bypass the handle cache
+    # so the re-spread really runs
+    monkeypatch.setattr(tables, "_FANOUT_MIN_BYTES", 0)
+    monkeypatch.setattr(tables, "_HANDLE_CACHE", {})
+    cols = ["l_orderkey", "l_linenumber"]
+    df = tables.load_table(spark, sf_dir, "lineitem", fanout=True).select(cols)
+    raw = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(cols)
+    assert "hashpartitioning(l_orderkey" in (
+        df._jdf.queryExecution().executedPlan().toString()
     )
+    # exact multiset equality on the key columns
+    assert df.count() == raw.count()
+    assert df.exceptAll(raw).count() == 0
 
 
 def test_handle_cache_hits_and_invalidates(spark, sf_dir, tmp_path):

@@ -72,23 +72,50 @@ def test_registry_names_are_well_formed():
 
 
 def test_attestation_window_is_well_formed():
-    """The driver attests only the first 50 registered queries, ordered
-    by the hand-rotated _ATTESTATION_PRIORITY list. A typo during
-    rotation would NOT fail anything by itself — the misspelled name
-    just never matches, ranks as unlisted, and some alphabetical query
-    silently takes the slot — so pin the invariants: exactly 50
-    entries, no duplicates, every entry a registered query name."""
-    from oculus_data_pipeline_spark.queries import _ATTESTATION_PRIORITY
+    """The driver attests the first 50 names get_queries() returns, an
+    order derived from the CORRECTNESS_r*.json records in the repo
+    root. A wrong records path would not fail anything by itself — the
+    order would silently fall back to alphabetical — so pin that every
+    record file loads and that the window is not the fallback."""
+    import glob
+    import os
 
-    assert len(_ATTESTATION_PRIORITY) == 50, (
-        f"window has {len(_ATTESTATION_PRIORITY)} slots, driver attests 50"
+    from oculus_data_pipeline_spark.queries import _load_records
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+    assert files and len(_load_records()) == len(files)
+    window = list(QUERIES)[:50]
+    assert window != sorted(QUERIES)[:50], "records ignored: alphabetical window"
+
+
+def test_attestation_order_ranks_stalest_first():
+    """The rule on synthetic records: a query whose latest driver row
+    fails, or that has no row, ranks first; the rest rank by their
+    latest green round, oldest first, ties by name. An oracle-less
+    query (q46) is green on the driver's rows-only 'no_oracle' row."""
+    from oculus_data_pipeline_spark.queries import ORACLE, _stalest_first
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    failed = {"rows_match": True, "schema_match": True, "hash_match": False}
+    rows_only = {"spark_rows": 3, "err": "no_oracle"}
+    q01, q02, q03, q06, q07, q46 = (
+        "q01_pricing_summary",
+        "q02_shipping_priority",
+        "q03_region_revenue",
+        "q06_top_customers_per_nation",
+        "q07_running_order_totals",
+        "q46_approx_distinct",
     )
-    dupes = {
-        n for n in _ATTESTATION_PRIORITY if _ATTESTATION_PRIORITY.count(n) > 1
+    assert q46 not in ORACLE and {q01, q02, q03, q06, q07} <= set(ORACLE)
+    rounds = {
+        1: {q01: green, q02: failed, q03: green, q06: green, q46: rows_only},
+        2: {q02: green, q03: failed, q46: rows_only},
+        3: {q06: green},
     }
-    assert not dupes, f"duplicate window slots: {sorted(dupes)}"
-    unknown = set(_ATTESTATION_PRIORITY) - set(QUERIES)
-    assert not unknown, f"window entries not in the registry: {sorted(unknown)}"
+    names = [q46, q07, q06, q03, q02, q01]
+    assert _stalest_first(names, rounds) == [q03, q07, q01, q02, q46, q06]
+    assert _stalest_first(names, {}) == sorted(names)
 
 
 def test_oracle_output_types_are_hash_portable(conn):
