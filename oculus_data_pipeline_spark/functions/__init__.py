@@ -6,14 +6,12 @@ from .text import (
     generate_uri_oracle_sql,
     normalize_term,
     strip_parenthetical,
-    with_converted_name,
 )
 from .vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
     "TITLE_KEYWORDS",
     "convert_name",
-    "with_converted_name",
     "convert_name_oracle_query",
     "generate_uri",
     "generate_uri_oracle_sql",

@@ -45,9 +45,10 @@ def md5_int_sql(expr: str, hex_chars: int = 12) -> str:
 MERSENNE31 = 2147483647
 
 
-def affine_hash(h: Column, a: int, b: int, p: int = MERSENNE31) -> Column:
-    """Universal-hash family member h -> (a*(h%p)+b) % p, overflow-safe."""
-    return (F.lit(a) * (h % F.lit(p)) + F.lit(b)) % F.lit(p)
+def affine_hash(h: str, a: int, b: int, p: int = MERSENNE31) -> str:
+    """Universal-hash family member h -> (a*(h%p)+b) % p, overflow-safe,
+    as SQL text that Spark and DuckDB read alike."""
+    return f"({a} * (({h}) % {p}) + {b}) % {p}"
 
 
 def minhash_params(num_perms: int, seed: int = 42) -> list[tuple[int, int]]:

@@ -1,6 +1,13 @@
 """Scalar text kernels — the semantic heart of the reference pipeline,
-re-expressed as pure Spark Column expressions (JVM-side, whole-stage
+re-expressed as Spark SQL expression text (JVM-side, whole-stage
 codegen; no Python UDFs anywhere here).
+
+Each kernel is one ``*_sql(expr)`` generator: it takes the SQL text of
+its input (a column name, an expression, or a lambda variable) and
+returns SQL text, so a caller can splice it into one wide
+``selectExpr``/``F.expr`` string and the whole projection costs one
+parse instead of one py4j round trip per Column method. The plain
+name (``normalize_term`` etc.) is that text as a Column.
 
 Reference parity (file:line in /root/reference/):
 - ``normalize_term``  ← xml_to_json.py:7-14 / json_classification.py:70-77
@@ -15,34 +22,38 @@ verify value-for-value equivalence.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Python str.strip() semantics (all whitespace), not SQL trim(), which
+# is space-only: a regexp on both ends.
+_STRIP = r"'^\\s+|\\s+$'"
 
-def normalize_term(c: Column | str) -> Column:
+
+def normalize_term_sql(expr: str) -> str:
     """Collapse internal whitespace, trim, lowercase.
 
     The join-key normalizer used everywhere in the reference
     (xml_to_json.py:7-14). Idempotent.
     """
-    c = F.col(c) if isinstance(c, str) else c
-    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
+    return rf"lower(trim(regexp_replace({expr}, '\\s+', ' ')))"
+
+
+def normalize_term(expr: str) -> Column:
+    return F.expr(normalize_term_sql(expr))
 
 
 def normalize_term_oracle_sql(expr: str) -> str:
     return f"lower(trim(regexp_replace({expr}, '\\s+', ' ', 'g')))"
 
 
-def strip_parenthetical(c: Column | str) -> Column:
-    """Remove ``(...)`` spans (non-greedy) then strip — xml_to_json.py:34-36.
+def strip_parenthetical_sql(expr: str) -> str:
+    """Remove ``(...)`` spans (non-greedy) then strip — xml_to_json.py:34-36."""
+    return rf"regexp_replace(regexp_replace({expr}, '\\(.*?\\)', ''), {_STRIP}, '')"
 
-    Python's str.strip() removes ALL whitespace (tabs/newlines too);
-    SQL trim() is space-only — so the strip is a regexp on both sides.
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    return F.regexp_replace(
-        F.regexp_replace(c, r"\(.*?\)", ""), r"^\s+|\s+$", ""
-    )
+
+def strip_parenthetical(expr: str) -> Column:
+    return F.expr(strip_parenthetical_sql(expr))
 
 
 def strip_parenthetical_oracle_sql(expr: str) -> str:
@@ -52,20 +63,22 @@ def strip_parenthetical_oracle_sql(expr: str) -> str:
     )
 
 
-def generate_uri(c: Column | str) -> Column:
+def generate_uri_sql(expr: str) -> str:
     """Deterministic hash surrogate key ("URI") — generate_uri.py:5-26.
 
     lower → drop spaces and commas → sha256 hex → int(hex[:8], 16)
     → % 100_000_000 → prefix ``'r'``. Pure JVM expression:
     ``conv(substring(sha2(s,256),1,8),16,10)`` parses the hex.
     """
-    c = F.col(c) if isinstance(c, str) else c
-    cleaned = F.regexp_replace(F.lower(c), r"[ ,]", "")
-    hash_int = (
-        F.conv(F.substring(F.sha2(cleaned, 256), 1, 8), 16, 10).cast("long")
-        % 100000000
+    digest = f"sha2(regexp_replace(lower({expr}), '[ ,]', ''), 256)"
+    return (
+        f"concat('r', CAST(CAST(conv(substring({digest}, 1, 8), 16, 10) AS BIGINT)"
+        " % 100000000 AS STRING))"
     )
-    return F.concat(F.lit("r"), hash_int.cast("string"))
+
+
+def generate_uri(expr: str) -> Column:
+    return F.expr(generate_uri_sql(expr))
 
 
 def generate_uri_oracle_sql(expr: str) -> str:
@@ -90,7 +103,7 @@ TITLE_KEYWORDS = [
 ]
 
 
-def convert_name(c: Column | str) -> Column:
+def convert_name_sql(expr: str) -> str:
     """'Last, First' → 'First Last' / '{titles} {rest} de {Last}'.
 
     Faithful reproduction of json_classification.py:40-67 including its
@@ -109,53 +122,36 @@ def convert_name(c: Column | str) -> Column:
     state is ``struct(titles, rest)``: each step reads the remainder
     through the lambda variable, so the expression stays linear in the
     keyword count (an inlined fold would duplicate the remainder
-    subtree per step). A plain Column, so it also runs inside
-    ``transform`` over a name array. Pure JVM expressions.
+    subtree per step). ``expr`` may be a lambda variable, so the
+    kernel also runs inside ``transform`` over a name array.
     """
-    c = F.col(c) if isinstance(c, str) else c
-    parts = F.split(c, ", ", -1)
-    last = F.element_at(parts, 1)
-
-    def step(acc: Column, kw: Column) -> Column:
-        return F.when(
-            acc["rest"].contains(kw),
-            F.struct(
-                F.concat(acc["titles"], F.array(kw)).alias("titles"),
-                # Python str.strip() semantics (all whitespace), not SQL trim
-                F.regexp_replace(
-                    F.replace(acc["rest"], kw, F.lit("")), r"^\s+|\s+$", ""
-                ).alias("rest"),
-            ),
-        ).otherwise(acc)
-
-    def finish(acc: Column) -> Column:
-        return F.when(
-            F.size(acc["titles"]) == 0, F.concat(acc["rest"], F.lit(" "), last)
-        ).otherwise(
-            F.concat(
-                F.array_join(acc["titles"], " "), F.lit(" "), acc["rest"],
-                F.lit(" de "), last,
-            )
-        )
-
-    converted = F.aggregate(
-        F.array(*[F.lit(kw) for kw in TITLE_KEYWORDS]),
-        F.struct(
-            F.array().cast("array<string>").alias("titles"),
-            # get() is NULL-safe out of range; the fold only runs where
-            # the split has exactly 2 parts anyway
-            F.get(parts, 1).alias("rest"),
-        ),
-        step,
-        finish,
+    parts = f"split({expr}, ', ', -1)"
+    last = f"element_at({parts}, 1)"
+    keywords = ", ".join(f"'{kw}'" for kw in TITLE_KEYWORDS)
+    # cn_-prefixed lambda variables, so they cannot shadow a column
+    # that ``expr`` names
+    step = (
+        "(cn_acc, cn_kw) -> CASE WHEN contains(cn_acc.rest, cn_kw) THEN named_struct("
+        "'titles', concat(cn_acc.titles, array(cn_kw)), "
+        f"'rest', regexp_replace(replace(cn_acc.rest, cn_kw, ''), {_STRIP}, '')) "
+        "ELSE cn_acc END"
     )
-    return F.when(c.contains(",") & (F.size(parts) == 2), converted).otherwise(c)
+    finish = (
+        "cn_acc -> CASE WHEN size(cn_acc.titles) = 0 "
+        f"THEN concat(cn_acc.rest, ' ', {last}) "
+        f"ELSE concat(array_join(cn_acc.titles, ' '), ' ', cn_acc.rest, ' de ', {last}) END"
+    )
+    # get() is NULL-safe out of range; the fold only runs where the
+    # split has exactly 2 parts anyway
+    zero = f"named_struct('titles', CAST(array() AS ARRAY<STRING>), 'rest', get({parts}, 1))"
+    return (
+        f"CASE WHEN contains({expr}, ',') AND size({parts}) = 2 "
+        f"THEN aggregate(array({keywords}), {zero}, {step}, {finish}) ELSE {expr} END"
+    )
 
 
-def with_converted_name(df: DataFrame, name_col: str, out_col: str) -> DataFrame:
-    """``df`` plus ``out_col`` = :func:`convert_name` of ``name_col``:
-    one ``aggregate`` fold over the title keywords, one projection."""
-    return df.withColumn(out_col, convert_name(name_col))
+def convert_name(expr: str) -> Column:
+    return F.expr(convert_name_sql(expr))
 
 
 def convert_name_oracle_query(

@@ -40,16 +40,15 @@ class Classifier(Protocol):
 class EchoClassifier:
     """Deterministic rule-based classifier: label = LABELS[md5(term) % 4].
 
-    Pure Column expression — used for every oracle-checked query (the
+    Pure JVM expression — used for every oracle-checked query (the
     SQL equivalent embeds the same md5 arithmetic).
     """
 
     def classify(self, terms: DataFrame) -> DataFrame:
-        idx = md5_int("norm_term") % 4
-        label = F.lit(LABELS[0])
-        for i, lab in enumerate(LABELS[1:], start=1):
-            label = F.when(idx == i, F.lit(lab)).otherwise(label)
-        return terms.select("norm_term", label.alias("label"))
+        hit = " ".join(f"WHEN idx = {i} THEN '{lab}'" for i, lab in enumerate(LABELS) if i)
+        return terms.select("norm_term", (md5_int("norm_term") % 4).alias("idx")).selectExpr(
+            "norm_term", f"CASE {hit} ELSE '{LABELS[0]}' END AS label"
+        )
 
 
 class MockReplayClassifier:
@@ -68,9 +67,7 @@ class MockReplayClassifier:
         resps = spark.read.json(self.responses_path)
         req_terms = reqs.select(
             F.col("custom_id"),
-            normalize_term(F.element_at(F.col("body.messages"), -1)["content"]).alias(
-                "norm_term"
-            ),
+            normalize_term("element_at(body.messages, -1).content").alias("norm_term"),
         )
         resp_labels = resps.select(
             F.col("custom_id"),
@@ -370,29 +367,19 @@ def classify_terms(
     # key (r10 review; same policy as the reference, which never
     # enumerates None into terms_to_classify — its isinstance(str)
     # guards at json_classification.py:330-335 skip non-strings).
-    distinct_terms = (
-        with_norm.select("norm_term").where(F.col("norm_term").isNotNull()).distinct()
-    )
+    distinct_terms = with_norm.select("norm_term").where("norm_term IS NOT NULL").distinct()
     if known_entities is not None:
-        known = known_entities.select("norm_term", F.col("label").alias("known_label"))
+        known = known_entities.select("norm_term", "label")
         to_classify = distinct_terms.join(F.broadcast(known), "norm_term", "left_anti")
+        labels = known.unionByName(classifier.classify(to_classify))
     else:
-        known = None
-        to_classify = distinct_terms
-    inferred = classifier.classify(to_classify)
-    if known is not None:
-        labels = known.select("norm_term", F.col("known_label").alias("label")).unionByName(
-            inferred
-        )
-    else:
-        labels = inferred
+        labels = classifier.classify(distinct_terms)
     # No broadcast hint on the join-back: ``labels`` is ALL distinct
     # terms (with labels) — at 100 TB that's billions of rows, so a
     # mandatory broadcast would OOM the executors. AQE picks broadcast
     # at runtime whenever the distinct-term set is actually small
     # (the known-entities anti-join above stays hinted because the
     # reference's known set is small by construction).
-    return (
-        with_norm.join(labels, "norm_term", "left")
-        .withColumn("label", F.coalesce("label", F.lit("term")))
+    return with_norm.join(labels, "norm_term", "left").withColumn(
+        "label", F.expr("coalesce(label, 'term')")
     )

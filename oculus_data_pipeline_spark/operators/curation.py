@@ -228,7 +228,7 @@ def source_mixture_plan(
         F.col(source_col).alias("source"),
         # the shared empty-safe tokenizer: blank docs contribute 0
         # tokens to their source's volume, not 1 (r10, with _toks)
-        F.size(_toks(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.size(_toks(text_col)).cast("long").alias("n_tokens"),
         (md5_int(F.col(id_col).cast("string")) % 1000000).alias("u"),
     )
     per_src = per_doc.groupBy("source").agg(

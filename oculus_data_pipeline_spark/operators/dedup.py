@@ -34,7 +34,7 @@ from ..functions.hashing import affine_hash, md5_int, minhash_params
 from ..functions.text import normalize_term
 
 
-def tokens(c: Column | str) -> Column:
+def tokens(expr: str) -> Column:
     """Whitespace tokens of a normalized text column — the ONE shared
     tokenizer (textstats._toks): empty-safe, so a blank/whitespace-only
     doc yields ``[]`` not ``['']``. Pre-r10 this was an independent
@@ -46,7 +46,7 @@ def tokens(c: Column | str) -> Column:
     blank docs)."""
     from .textstats import _toks
 
-    return _toks(c)
+    return _toks(expr)
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -73,15 +73,11 @@ def shingle_table(
     Docs with fewer than ``n`` tokens produce no shingles (guarded —
     Spark's ``sequence`` would otherwise happily count backwards).
     """
-    toks = F.col("toks")
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-    )
+    shingles = f"transform(sequence(0, size(toks) - {n}), i -> array_join(slice(toks, i + 1, {n}), ' '))"
     return (
         docs.select(F.col(id_col).alias("id"), tokens(text_col).alias("toks"))
-        .where(F.size("toks") >= n)
-        .select("id", F.explode(shingles).alias("shingle"))
+        .where(f"size(toks) >= {n}")
+        .selectExpr("id", f"explode({shingles}) AS shingle")
         .distinct()
     )
 
@@ -195,16 +191,11 @@ def minhash_signatures(
         if hashed_shingles is not None
         else hashed_shingle_table(docs, text_col, id_col, shingle_n)
     )
-    h = F.col("sh")
-    perm_cols = [
-        affine_hash(h, a, b).alias(f"p{j}")
-        for j, (a, b) in enumerate(minhash_params(num_perms))
-    ]
-    hashed = sh.select("id", *perm_cols)
-    aggs = [F.min(f"p{j}").alias(f"m{j}") for j in range(num_perms)]
+    aggs = [f"min({affine_hash('sh', a, b)}) AS m{j}" for j, (a, b) in enumerate(minhash_params(num_perms))]
     if with_size:
-        aggs.append(F.count("*").alias("n_sh"))
-    return hashed.groupBy("id").agg(*aggs)
+        aggs.append("count(1) AS n_sh")
+    # one struct of all aggregates: one expression to build, P partial mins to run
+    return sh.groupBy("id").agg(F.expr(f"struct({', '.join(aggs)}) AS s")).selectExpr("id", "s.*")
 
 
 def minhash_candidate_pairs(
@@ -237,28 +228,15 @@ def minhash_candidate_pairs(
         hashed_shingles=hashed_shingles,
         with_size=with_sizes,
     )
-    band_rows = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.concat_ws(
-                "-",
-                *[
-                    F.col(f"m{band * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            ).alias("band_sig"),
-        )
+    band_rows = ", ".join(
+        f"struct({band} AS band, concat_ws('-', "
+        + ", ".join(f"CAST(m{band * rows_per_band + r} AS STRING)" for r in range(rows_per_band))
+        + ") AS band_sig)"
         for band in range(bands)
-    ]
+    )
     size_cols = ["n_sh"] if with_sizes else []
     band_sigs = (
-        sig.select("id", *size_cols, F.explode(F.array(*band_rows)).alias("b"))
-        .select(
-            "id",
-            *size_cols,
-            F.col("b.band").alias("band"),
-            F.col("b.band_sig").alias("band_sig"),
-        )
+        sig.selectExpr("id", *size_cols, f"inline(array({band_rows}))")
         .persist()  # feeds both sides of the candidate self-join
     )
     a, b = band_sigs.alias("a"), band_sigs.alias("b")
@@ -351,18 +329,13 @@ def simhash(
         .distinct()
         .withColumn("h", md5_int("tok"))
     )
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{i}")
+    # bit i is set when most distinct tokens have it set
+    fp = " + ".join(
+        f"CASE WHEN sum(CASE WHEN (shiftright(h, {i}) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
+        f"THEN {1 << i} ELSE 0 END"
         for i in range(bits)
-    ]
-    agg = tok.groupBy("id").agg(*bit_sums)
-    fp = None
-    for i in range(bits):
-        term = F.when(F.col(f"s{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        fp = term if fp is None else fp + term
-    return agg.select("id", fp.cast("long").alias("simhash"))
+    )
+    return tok.groupBy("id").agg(F.expr(f"CAST({fp} AS BIGINT) AS simhash"))
 
 
 def simhash_near_dups(

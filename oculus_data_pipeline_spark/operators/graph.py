@@ -1,5 +1,5 @@
 """The term → graph mapping — the reference's Neo4j sink re-expressed as
-Column expressions.
+Spark SQL expression text.
 
 Reference parity (json_to_db.py:104-127): each
 classified term is dispatched by ONE rule. Person, place and
@@ -15,11 +15,13 @@ become a fixed rel_type column.
 Node labels: Document/Person/Place/Organization/Term (json_to_db.py:
 7-44); edge types HAS_PERSON/HAS_PLACE/HAS_ORGANIZATION/HAS_TERM
 (:104-119).
+
+Each helper takes the SQL text of its inputs and returns SQL text, so
+callers splice the rule into one ``selectExpr`` or ``struct(...)``;
+the returned ``expr AS name`` items work in both.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 # The reference's type dispatch (json_to_db.py:104-119) is an
 # if/elif over person/place/organization with an unconditional
@@ -35,43 +37,39 @@ from pyspark.sql import functions as F
 TYPED_LABELS = ("person", "place", "organization")
 
 
-def canonical_label(label_col: F.Column) -> F.Column:
+def canonical_label(label: str) -> str:
     """NULL-safe label canonicalization to the reference's dispatch
     domain: person/place/organization pass through, everything else
     (including NULL and unknown labels) is a plain index 'term' —
     json_to_db.py:104-119's ``else`` branch."""
-    return F.when(label_col.isin(*TYPED_LABELS), label_col).otherwise(
-        F.lit("term")
-    )
+    typed = ", ".join(f"'{t}'" for t in TYPED_LABELS)
+    return f"CASE WHEN {label} IN ({typed}) THEN {label} ELSE 'term' END"
 
 
-def term_node(canon: F.Column, term: F.Column, uri: F.Column) -> list[F.Column]:
+def term_node(canon: str, term: str, uri: str) -> list[str]:
     """``label, name, key`` of a term's node, given its canonical label
     and the URI the URI stage gives it (generate_uri.py:43-45).
 
     Typed entities are keyed by that URI. Plain terms are keyed by
     their text, even when a URI exists: create_term and
     relate_index_term key by text alone (json_to_db.py:34-38, 54-60)."""
+    labels = " ".join(f"WHEN {canon} = '{t}' THEN '{t.title()}'" for t in TYPED_LABELS)
     return [
-        F.when(canon == "person", "Person")
-        .when(canon == "place", "Place")
-        .when(canon == "organization", "Organization")
-        .otherwise("Term")
-        .alias("label"),
-        term.alias("name"),
-        F.when(canon == "term", term).otherwise(uri).alias("key"),
+        f"CASE {labels} ELSE 'Term' END AS label",
+        f"{term} AS name",
+        f"CASE WHEN {canon} = 'term' THEN {term} ELSE {uri} END AS key",
     ]
 
 
-def has_edge(canon: F.Column, key: F.Column, doc: F.Column) -> list[F.Column]:
+def has_edge(canon: str, key: str, doc: str) -> list[str]:
     """``src, dst, rel_type`` of a term's ``HAS_*`` edge, given its
     canonical label and node key. Typed entities point AT the document
     — (e)-[:HAS_PERSON|HAS_PLACE|HAS_ORGANIZATION]->(d) via
     create_relationship (json_to_db.py:46-52) — while plain terms hang
     off it — (d)-[:HAS_TERM]->(t) via relate_index_term (:54-60)."""
-    is_term = canon == "term"
+    is_term = f"{canon} = 'term'"
     return [
-        F.when(is_term, doc).otherwise(key).alias("src"),
-        F.when(is_term, key).otherwise(doc).alias("dst"),
-        F.concat(F.lit("HAS_"), F.upper(canon)).alias("rel_type"),
+        f"CASE WHEN {is_term} THEN {doc} ELSE {key} END AS src",
+        f"CASE WHEN {is_term} THEN {key} ELSE {doc} END AS dst",
+        f"concat('HAS_', upper({canon})) AS rel_type",
     ]

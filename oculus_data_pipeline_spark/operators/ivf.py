@@ -117,21 +117,22 @@ def train_kmeans(
             f"train_kmeans: dim={dim} but {vec_col!r} vectors have "
             f"{cents.shape[1]} components"
         )
-    mean_cols = [
-        (
-            F.sum(F.element_at(vec_col, d + 1).cast("decimal(30,15)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias(f"m{d}")
-        for d in range(dim)
-    ]
+    means = F.expr(
+        "array("
+        + ", ".join(
+            f"CAST(sum(CAST(element_at({vec_col}, {d + 1}) AS DECIMAL(30,15))) AS DOUBLE) / count(1)"
+            for d in range(dim)
+        )
+        + ") AS m"
+    )
     for _ in range(n_iters):
         sink: list = []
         assigned = _assign(corpus, vec_col, cents, "cluster", bc_out=sink)
-        rows = assigned.groupBy("cluster").agg(*mean_cols).collect()
+        rows = assigned.groupBy("cluster").agg(means).collect()
         sink[0].destroy()
         new = cents.copy()
         for r in rows:
-            new[r["cluster"]] = [r[f"m{d}"] for d in range(dim)]
+            new[r["cluster"]] = r["m"]
         if np.array_equal(new, cents):
             break
         cents = new

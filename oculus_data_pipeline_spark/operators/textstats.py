@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalize_term
+from ..functions.text import normalize_term, normalize_term_sql
 
 # Small, fixed stopword inventories — enough signal for a heuristic
 # language vote; deliberately tiny so the same lists embed in the SQL
@@ -32,7 +32,7 @@ EN_STOPWORDS = LANG_STOPWORDS["en"]
 BPE_TOKEN_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
-def _toks(c: Column | str) -> Column:
+def _toks(expr: str) -> Column:
     """Whitespace tokens of the normalized text, EMPTY-SAFE: a blank or
     whitespace-only doc tokenizes to ``[]``, not ``['']``.
 
@@ -50,8 +50,7 @@ def _toks(c: Column | str) -> Column:
     share the normalize regexp across when-branches, so it runs twice.
     Oracle twin: :func:`toks_oracle_sql`.
     """
-    c = F.col(c) if isinstance(c, str) else c
-    return F.array_remove(F.split(normalize_term(c), " "), "")
+    return F.expr(f"array_remove(split({normalize_term_sql(expr)}, ' '), '')")
 
 
 def toks_oracle_sql(expr: str) -> str:

@@ -14,6 +14,13 @@ and the per-file ProcessPoolExecutor (run_pipeline.py:104-109) is
 replaced by Spark's own partition parallelism: at 100 TB the XML scan
 fans out across the cluster with no user-level scheduling.
 
+Every wide projection is one ``selectExpr`` of SQL text spliced from
+the ``*_sql`` text kernels, with SQL lambdas (``n -> ...``) inside the
+higher-order functions. Building the plan then costs a few py4j round
+trips per projection instead of several per Column method, which is
+most of a warm run's fixed cost (a micro-batch pays it again per
+trigger).
+
 Semantic parity notes (each cites the reference behavior it preserves):
 - term triples are collected with parentheticals stripped per part and
   first-wins per-document dedup (xml_to_json.py:24-44);
@@ -32,13 +39,22 @@ Semantic parity notes (each cites the reference behavior it preserves):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import convert_name, generate_uri, normalize_term, strip_parenthetical
+from ..functions.text import (
+    convert_name_sql,
+    generate_uri_sql,
+    normalize_term_sql,
+    strip_parenthetical_sql,
+)
 from ..operators.classify import Classifier, classify_terms
 from ..operators.graph import canonical_label, has_edge, term_node
+
+# The three parts of an index term (xml_to_json.py:24-44).
+PARTS = ("main", "midsub", "sub")
+NO_NAMES = "CAST(array() AS ARRAY<STRING>)"
 
 # Explicit schema (SURVEY.md §1.4): inference would collapse
 # single-element arrays to scalars and parse dates; the reference keeps
@@ -115,23 +131,20 @@ def _canonical_documents(raw: DataFrame) -> DataFrame:
     """Project a DOCUMENT_XML_SCHEMA scan to the canonical nested shape
     shared by every XML reader (native, quarantine, streaming and the
     Python data source)."""
-    return raw.select(
-        F.col("documentID").alias("doc_id"),
-        F.col("documentTitle").alias("title"),
-        F.struct(
-            F.col("projectInfo.publicationName").alias("publication_name"),
-            F.col("projectInfo.seriesName").alias("series_name"),
-            F.col("projectInfo.volumeInfo").alias("volume_info"),
-            F.col("projectInfo.publisher").alias("publisher"),
-            F.coalesce(F.col("projectInfo.formats.type"), F.array()).alias("formats"),
-        ).alias("project_info"),
-        F.coalesce(F.col("authors.author"), F.array()).alias("authors"),
-        F.coalesce(F.col("recipients.recipient"), F.array()).alias("recipients"),
-        F.col("dates.`date-from`").alias("date_from"),
-        F.col("dates.`date-to`").alias("date_to"),
-        F.col("location.placeName").alias("location_name"),
-        F.coalesce(F.col("repositories.repository"), F.array()).alias("repositories"),
-        F.coalesce(F.col("indexing.indexTerm"), F.array()).alias("indexing"),
+    return raw.selectExpr(
+        "documentID AS doc_id",
+        "documentTitle AS title",
+        "struct(projectInfo.publicationName AS publication_name,"
+        " projectInfo.seriesName AS series_name, projectInfo.volumeInfo AS volume_info,"
+        " projectInfo.publisher AS publisher,"
+        " coalesce(projectInfo.formats.type, array()) AS formats) AS project_info",
+        "coalesce(authors.author, array()) AS authors",
+        "coalesce(recipients.recipient, array()) AS recipients",
+        "dates.`date-from` AS date_from",
+        "dates.`date-to` AS date_to",
+        "location.placeName AS location_name",
+        "coalesce(repositories.repository, array()) AS repositories",
+        "coalesce(indexing.indexTerm, array()) AS indexing",
     )
 
 
@@ -203,20 +216,16 @@ def extract_terms(docs: DataFrame) -> DataFrame:
     Returns (doc_id, pos, main, midsub, sub) — pos preserves document
     order so downstream output is deterministic.
     """
-    exploded = docs.select(
-        "doc_id", F.posexplode_outer("indexing").alias("pos", "t")
-    ).where(F.col("t").isNotNull())
-    cleaned = exploded.select(
-        "doc_id",
-        "pos",
-        strip_parenthetical(F.coalesce(F.col("t.main"), F.lit(""))).alias("main"),
-        strip_parenthetical(F.coalesce(F.col("t.midsub"), F.lit(""))).alias("midsub"),
-        strip_parenthetical(F.coalesce(F.col("t.sub"), F.lit(""))).alias("sub"),
-    )
-    w = W.partitionBy("doc_id", "main", "midsub", "sub").orderBy("pos")
+    stripped = [strip_parenthetical_sql(f"coalesce(t.{p}, '')") + f" AS {p}" for p in PARTS]
     return (
-        cleaned.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        docs.selectExpr("doc_id", "posexplode_outer(indexing) AS (pos, t)")
+        .where("t IS NOT NULL")
+        .selectExpr("doc_id", "pos", *stripped)
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY doc_id, main, midsub, sub ORDER BY pos) AS rn",
+        )
+        .where("rn = 1")
         .drop("rn")
     )
 
@@ -232,24 +241,16 @@ def known_entities_from_docs(docs: DataFrame) -> DataFrame:
     dropped instead of emitting a junk NULL norm_term row — the
     reference crashes on both (normalize_term does re.sub on None,
     json_classification.py:70-78)."""
-    empty = F.array().cast("array<string>")
     persons = (
-        docs.select(
-            F.explode(
-                F.concat(
-                    F.coalesce("authors", empty), F.coalesce("recipients", empty)
-                )
-            ).alias("name")
+        docs.selectExpr(
+            f"explode(concat(coalesce(authors, {NO_NAMES}), coalesce(recipients, {NO_NAMES})))"
+            " AS name"
         )
-        .where(F.col("name").isNotNull())
-        .select(normalize_term("name").alias("norm_term"), F.lit("person").alias("label"))
+        .where("name IS NOT NULL")
+        .selectExpr(f"{normalize_term_sql('name')} AS norm_term", "'person' AS label")
     )
-    places = (
-        docs.where(F.col("location_name").isNotNull())
-        .select(
-            normalize_term("location_name").alias("norm_term"),
-            F.lit("place").alias("label"),
-        )
+    places = docs.where("location_name IS NOT NULL").selectExpr(
+        f"{normalize_term_sql('location_name')} AS norm_term", "'place' AS label"
     )
     return persons.unionByName(places).dropDuplicates(["norm_term"])
 
@@ -266,62 +267,34 @@ def classify_document_terms(
     repivots back to columns.
     """
     parts = (
-        terms.unpivot(
-            ["doc_id", "pos", "main", "midsub", "sub"],
-            ["main", "midsub", "sub"],
-            "part",
-            "term",
-        )
-        .where(F.length("term") > 0)
+        terms.unpivot(["doc_id", "pos", *PARTS], list(PARTS), "part", "term")
+        .where("length(term) > 0")
         # pivot output columns are named after the part VALUES; prefix
         # them so they don't collide with the main/midsub/sub key cols
-        .withColumn("part", F.concat(F.lit("p_"), F.col("part")))
+        .withColumn("part", F.expr("concat('p_', part)"))
     )
-    labeled = classify_terms(parts, classifier, known_entities=known)
-    # person terms render via convert_name (json_classification.py:80-92)
-    labeled = labeled.withColumn(
+    labeled = classify_terms(parts, classifier, known_entities=known).withColumn(
+        # person terms render via convert_name (json_classification.py:80-92)
         "term_display",
-        F.when(F.col("label") == "person", convert_name("term")).otherwise(
-            F.col("term")
-        ),
+        F.expr(f"CASE WHEN label = 'person' THEN {convert_name_sql('term')} ELSE term END"),
     )
     pivoted = (
-        labeled.groupBy("doc_id", "pos", "main", "midsub", "sub")
-        .pivot("part", ["p_main", "p_midsub", "p_sub"])
-        .agg(
-            F.first(
-                F.struct(
-                    F.col("term_display").alias("term"),
-                    F.col("label").alias("type"),
-                )
-            )
-        )
-        .withColumnsRenamed(
-            {"p_main": "main_obj", "p_midsub": "midsub_obj", "p_sub": "sub_obj"}
-        )
+        labeled.groupBy("doc_id", "pos", *PARTS)
+        .pivot("part", [f"p_{p}" for p in PARTS])
+        .agg(F.expr("first(struct(term_display AS term, label AS type))"))
     )
-    def term_obj(obj_col: str, raw_col: str):
-        # empty part → {term: '', type: 'term'} placeholder; NULL obj
-        # only happens for empty raws (filtered above)
-        return F.when(
-            F.length(raw_col) > 0,
-            F.struct(
-                F.col(f"{obj_col}.term").alias("term"),
-                F.col(f"{obj_col}.type").alias("type"),
-                F.when(
-                    F.col(f"{obj_col}.type") != "term",
-                    generate_uri(F.col(f"{obj_col}.term")),
-                ).alias("uri"),
-            ),
+
+    # empty part → {term: '', type: 'term'} placeholder; NULL obj only
+    # happens for empty raws (filtered above)
+    def term_obj(part: str) -> str:
+        obj = f"p_{part}"
+        uri = f"CASE WHEN {obj}.type != 'term' THEN {generate_uri_sql(f'{obj}.term')} END"
+        return (
+            f"CASE WHEN length({part}) > 0 THEN "
+            f"struct({obj}.term AS term, {obj}.type AS type, {uri} AS uri) END AS {part}"
         )
 
-    return pivoted.select(
-        "doc_id",
-        "pos",
-        term_obj("main_obj", "main").alias("main"),
-        term_obj("midsub_obj", "midsub").alias("midsub"),
-        term_obj("sub_obj", "sub").alias("sub"),
-    )
+    return pivoted.selectExpr("doc_id", "pos", *[term_obj(p) for p in PARTS])
 
 
 def build_document_graph(docs: DataFrame, classified: DataFrame):
@@ -353,17 +326,13 @@ def build_document_graph(docs: DataFrame, classified: DataFrame):
     (Document, Person, Place and Date rows) and one over ``classified``
     (the main term and its midsub/sub children), unioned and deduped.
     """
-    def row(label: str, key, name, rel: str | None) -> F.Column:
-        return F.struct(
-            F.lit(label).alias("label"),
-            key.alias("key"),
-            name.alias("name"),
-            F.lit(rel).cast("string").alias("rel"),
-        )
+    def row(label: str, key: str, name: str, rel: str | None) -> str:
+        rel = f"'{rel}'" if rel else "CAST(NULL AS STRING)"
+        return f"struct('{label}' AS label, {key} AS key, {name} AS name, {rel} AS rel)"
 
-    def present(rows: list) -> F.Column:
+    def present(rows: list[str]) -> str:
         # conditional rows are NULL when their condition fails
-        return F.filter(F.array(*rows), lambda r: r.isNotNull())
+        return f"filter(array({', '.join(rows)}), r -> r IS NOT NULL)"
 
     # convert_name runs in the classification stage (json_classification
     # .py:233-237), BEFORE the URI stage hashes the name (generate_uri
@@ -377,120 +346,75 @@ def build_document_graph(docs: DataFrame, classified: DataFrame):
     # drops them too — emitting a NULL-key Person node would diverge
     # from both (r10 review). Empty-STRING names pass through: the
     # reference MERGEs a Person with name '' and uri hash('').
-    def people(col: str, rel: str) -> F.Column:
-        names = F.transform(
-            F.filter(
-                F.coalesce(col, F.array().cast("array<string>")),
-                lambda n: n.isNotNull(),
-            ),
-            convert_name,
+    def people(col: str, rel: str) -> str:
+        names = (
+            f"transform(filter(coalesce({col}, {NO_NAMES}), n -> n IS NOT NULL), "
+            f"n -> {convert_name_sql('n')})"
         )
-        return F.transform(names, lambda n: row("Person", generate_uri(n), n, rel))
+        return f"transform({names}, n -> {row('Person', generate_uri_sql('n'), 'n', rel)})"
 
-    def dated(col: str, rel: str) -> F.Column:
-        date = F.col(col)
-        return F.when(date.isNotNull() & (F.length(date) > 0), row("Date", date, date, rel))
+    def dated(col: str, rel: str) -> str:
+        return f"CASE WHEN {col} IS NOT NULL AND length({col}) > 0 THEN {row('Date', col, col, rel)} END"
 
-    loc = F.col("location_name")
+    loc = "location_name"
+    place = row("Place", generate_uri_sql(loc), loc, "LOCATION")
     # Pass 1: one row per Document, Person, Place and Date node of each
     # document; every row but the Document's also carries its edge.
-    doc_rows = docs.select(
+    fixed = present(
+        [
+            row("Document", "doc_id", "coalesce(title, doc_id)", None),
+            f"CASE WHEN {loc} IS NOT NULL THEN {place} END",
+            dated("date_from", "DATE_FROM"),
+            dated("date_to", "DATE_TO"),
+        ]
+    )
+    doc_rows = docs.selectExpr(
         "doc_id",
-        F.inline(
-            F.concat(
-                present(
-                    [
-                        row("Document", F.col("doc_id"), F.coalesce("title", "doc_id"), None),
-                        F.when(
-                            loc.isNotNull(), row("Place", generate_uri(loc), loc, "LOCATION")
-                        ),
-                        dated("date_from", "DATE_FROM"),
-                        dated("date_to", "DATE_TO"),
-                    ]
-                ),
-                people("authors", "AUTHOR"),
-                people("recipients", "RECIPIENT"),
-            )
-        ),
+        f"inline(concat({fixed}, {people('authors', 'AUTHOR')}, {people('recipients', 'RECIPIENT')}))",
     )
     # AUTHOR/RECIPIENT and create_relationship's LOCATION (json_to_db.py:
     # 46-52) MERGE (e)-[:REL]->(d), entity → document; DATE_FROM/DATE_TO
     # point document → date.
-    from_doc = F.col("label") == "Date"
-    doc_edges = doc_rows.where(F.col("rel").isNotNull()).select(
-        F.when(from_doc, F.col("doc_id")).otherwise(F.col("key")).alias("src"),
-        F.when(from_doc, F.col("key")).otherwise(F.col("doc_id")).alias("dst"),
-        F.col("rel").alias("rel_type"),
+    doc_edges = doc_rows.where("rel IS NOT NULL").selectExpr(
+        "CASE WHEN label = 'Date' THEN doc_id ELSE key END AS src",
+        "CASE WHEN label = 'Date' THEN key ELSE doc_id END AS dst",
+        "rel AS rel_type",
     )
 
     # Pass 2: one row per classified term. The main entity's canonical
     # label, node label and key are computed once, before the inlines.
-    canon = F.col("canon")
     mains = (
-        classified.where(F.col("main").isNotNull())
-        .select("doc_id", "main", "midsub", "sub", canonical_label(F.col("main.type")).alias("canon"))
-        .select(
+        classified.where("main IS NOT NULL")
+        .selectExpr("doc_id", "main", "midsub", "sub", f"{canonical_label('main.type')} AS canon")
+        .selectExpr(
             "doc_id",
             "midsub",
             "sub",
             "canon",
             # typed entities' stored uri, re-derived when the staged JSON
             # lacks one (generate_uri is deterministic, so coalesce == stored)
-            *term_node(
-                canon,
-                F.col("main.term"),
-                F.coalesce(F.col("main.uri"), generate_uri(F.col("main.term"))),
-            ),
+            *term_node("canon", "main.term", f"coalesce(main.uri, {generate_uri_sql('main.term')})"),
         )
     )
     children = ("midsub", "sub")
-    term_nodes = mains.select(
-        F.inline(
-            present(
-                [
-                    F.struct("label", "key", "name"),
-                    *[
-                        F.when(
-                            F.col(c).isNotNull(),
-                            F.struct(
-                                F.lit("Term").alias("label"),
-                                F.col(f"{c}.term").alias("key"),
-                                F.col(f"{c}.term").alias("name"),
-                            ),
-                        )
-                        for c in children
-                    ],
-                ]
-            )
-        )
-    )
+    child_nodes = [
+        f"CASE WHEN {c} IS NOT NULL THEN struct('Term' AS label, {c}.term AS key, {c}.term AS name) END"
+        for c in children
+    ]
+    term_nodes = mains.selectExpr(f"inline({present(['struct(label, key, name)', *child_nodes])})")
     # relate_sub_term (json_to_db.py:63-69, :121-127): sub term NODES
     # are always MERGEd (create_term, keyed by term text) but the
     # MIDSUB/SUB EDGES only materialize under Term parents — see the
     # quirk note in the docstring. Both edges hang off the MAIN term
     # (relate_sub_term gets term['term'] as the parent for midsub and
     # sub alike), matched by term text.
-    main_is_term = canon == "term"
-    term_edges = mains.select(
-        F.inline(
-            present(
-                [
-                    F.struct(*has_edge(canon, F.col("key"), F.col("doc_id"))),
-                    *[
-                        F.when(
-                            F.col(c).isNotNull() & main_is_term,
-                            F.struct(
-                                F.col("key").alias("src"),
-                                F.col(f"{c}.term").alias("dst"),
-                                F.lit(c.upper()).alias("rel_type"),
-                            ),
-                        )
-                        for c in children
-                    ],
-                ]
-            )
-        )
-    )
+    main_edge = f"struct({', '.join(has_edge('canon', 'key', 'doc_id'))})"
+    child_edges = [
+        f"CASE WHEN {c} IS NOT NULL AND canon = 'term' THEN "
+        f"struct(key AS src, {c}.term AS dst, '{c.upper()}' AS rel_type) END"
+        for c in children
+    ]
+    term_edges = mains.selectExpr(f"inline({present([main_edge, *child_edges])})")
 
     nodes = doc_rows.select("label", "key", "name").unionByName(term_nodes)
     edges = doc_edges.unionByName(term_edges)

@@ -28,11 +28,11 @@ distributed scan → transform → write with no driver materialization.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import convert_name, generate_uri
+from ..functions.text import convert_name_sql, generate_uri_sql
 from ..operators.classify import Classifier
 from .pipeline import (
     build_document_graph,
@@ -41,6 +41,8 @@ from .pipeline import (
     known_entities_from_docs,
     read_documents_xml,
 )
+
+NO_URI = "CAST(NULL AS STRING)"
 
 # The reference's updated-JSON document shape (json_classification.py
 # update_json output; generate_uri.py add_uri output).
@@ -127,34 +129,19 @@ def classify_stage(docs: DataFrame, classifier: Classifier) -> DataFrame:
     known = known_entities_from_docs(docs)
     classified = classify_document_terms(terms, known, classifier)
 
-    def drop_uri(obj: Column) -> Column:
-        return F.when(
-            obj.isNotNull(),
-            F.struct(
-                obj["term"].alias("term"),
-                obj["type"].alias("type"),
-                F.lit(None).cast("string").alias("uri"),
-            ),
+    def drop_uri(obj: str) -> str:
+        return (
+            f"CASE WHEN {obj} IS NOT NULL THEN "
+            f"struct({obj}.term AS term, {obj}.type AS type, {NO_URI} AS uri) END"
         )
 
+    item = (
+        f"struct(main.term AS term, main.type AS type, {NO_URI} AS uri, "
+        f"{drop_uri('midsub')} AS midsub, {drop_uri('sub')} AS sub)"
+    )
     items = classified.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("pos"),
-                        F.struct(
-                            F.col("main.term").alias("term"),
-                            F.col("main.type").alias("type"),
-                            F.lit(None).cast("string").alias("uri"),
-                            drop_uri(F.col("midsub")).alias("midsub"),
-                            drop_uri(F.col("sub")).alias("sub"),
-                        ).alias("item"),
-                    )
-                )
-            ),
-            lambda s: s["item"],
-        ).alias("indexing")
+        F.expr(f"transform(array_sort(collect_list(struct(pos, {item} AS item))), s -> s.item)")
+        .alias("indexing")
     )
 
     # convert author/recipient names in place (arrays stay ordered).
@@ -163,51 +150,38 @@ def classify_stage(docs: DataFrame, classifier: Classifier) -> DataFrame:
     # build_document_graph: the reference crashes on a None name
     # (convert_name, json_classification.py:51), so there is no
     # reference output to match and both engine paths agree on drop.
-    def converted_names(col: str) -> Column:
-        return F.transform(
-            F.filter(col, lambda n: n.isNotNull()),
-            lambda n: F.struct(
-                convert_name(n).alias("name"), F.lit(None).cast("string").alias("uri")
-            ),
-        ).alias(col)
+    def converted_names(col: str) -> str:
+        return (
+            f"transform(filter({col}, n -> n IS NOT NULL), "
+            f"n -> struct({convert_name_sql('n')} AS name, {NO_URI} AS uri)) AS {col}"
+        )
+
+    def or_empty(col: str) -> str:
+        array_type = ENRICHED_DOCUMENT_SCHEMA[col].dataType.simpleString()
+        return f"coalesce({col}, CAST(array() AS {array_type})) AS {col}"
 
     return (
-        docs.select(
+        docs.selectExpr(
             "doc_id",
             "title",
             "date_from",
             "date_to",
-            F.when(
-                F.col("location_name").isNotNull(),
-                F.struct(
-                    F.col("location_name").alias("name"),
-                    F.lit(None).cast("string").alias("uri"),
-                ),
-            ).alias("location"),
+            "CASE WHEN location_name IS NOT NULL THEN "
+            f"struct(location_name AS name, {NO_URI} AS uri) END AS location",
             converted_names("authors"),
             converted_names("recipients"),
         )
         .join(items, "doc_id", "left")
-        .select(
+        .selectExpr(
             "doc_id",
             "title",
-            F.coalesce("authors", F.array().cast("array<struct<name string, uri string>>")).alias("authors"),
-            F.coalesce("recipients", F.array().cast("array<struct<name string, uri string>>")).alias("recipients"),
+            or_empty("authors"),
+            or_empty("recipients"),
             "date_from",
             "date_to",
             "location",
-            F.coalesce(
-                "indexing", F.array().cast(f"array<{_enriched_item_ddl()}>")
-            ).alias("indexing"),
+            or_empty("indexing"),
         )
-    )
-
-
-def _enriched_item_ddl() -> str:
-    return (
-        "struct<term string, type string, uri string, "
-        "midsub struct<term string, type string, uri string>, "
-        "sub struct<term string, type string, uri string>>"
     )
 
 
@@ -215,12 +189,16 @@ def uri_stage(enriched: DataFrame) -> DataFrame:
     """Enriched documents → enriched documents with uris: the
     generate_uri stage. Authors, recipients and location get uris
     unconditionally; term objects (and their midsub/sub children) only
-    when type != 'term' (generate_uri.py:29-67 add_uri_if_needed)."""
+    when type != 'term' (generate_uri.py:29-67 add_uri_if_needed).
+    Each object is rebuilt field by field; a NULL object stays NULL."""
 
-    def with_name_uri(objs: Column) -> Column:
-        return F.transform(objs, lambda o: o.withField("uri", generate_uri(o["name"])))
+    def named(obj: str) -> str:
+        return (
+            f"CASE WHEN {obj} IS NOT NULL THEN "
+            f"struct({obj}.name AS name, {generate_uri_sql(f'{obj}.name')} AS uri) END"
+        )
 
-    def term_uri(obj: Column) -> Column:
+    def term_uri(obj: str, children: str = "") -> str:
         # add_uri_if_needed (generate_uri.py:36-45) reads
         # term_obj.get('type') and compares with Python `!=` — a
         # missing/None type is `None != 'term'` → True, so NULL types
@@ -228,32 +206,25 @@ def uri_stage(enriched: DataFrame) -> DataFrame:
         # would silently yield NULL instead (r10 review). Downstream
         # json_to_db then ignores that uri anyway (else-branch keys by
         # term text — see build_document_graph's canonical dispatch).
-        not_plain_term = obj["type"].isNull() | (obj["type"] != "term")
-        return F.when(
-            obj.isNotNull(),
-            obj.withField(
-                "uri",
-                F.when(not_plain_term, generate_uri(obj["term"])),
-            ),
+        uri = (
+            f"CASE WHEN {obj}.type IS NULL OR {obj}.type != 'term' "
+            f"THEN {generate_uri_sql(f'{obj}.term')} END"
+        )
+        return (
+            f"CASE WHEN {obj} IS NOT NULL THEN "
+            f"struct({obj}.term AS term, {obj}.type AS type, {uri} AS uri{children}) END"
         )
 
-    return enriched.select(
+    children = "".join(f", {term_uri(f'item.{c}')} AS {c}" for c in ("midsub", "sub"))
+    return enriched.selectExpr(
         "doc_id",
         "title",
-        with_name_uri(F.col("authors")).alias("authors"),
-        with_name_uri(F.col("recipients")).alias("recipients"),
+        f"transform(authors, o -> {named('o')}) AS authors",
+        f"transform(recipients, o -> {named('o')}) AS recipients",
         "date_from",
         "date_to",
-        F.when(
-            F.col("location").isNotNull(),
-            F.col("location").withField("uri", generate_uri(F.col("location.name"))),
-        ).alias("location"),
-        F.transform(
-            F.col("indexing"),
-            lambda item: term_uri(item)
-            .withField("midsub", term_uri(item["midsub"]))
-            .withField("sub", term_uri(item["sub"])),
-        ).alias("indexing"),
+        f"{named('location')} AS location",
+        f"transform(indexing, item -> {term_uri('item', children)}) AS indexing",
     )
 
 
@@ -264,30 +235,24 @@ def graph_stage(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:
     definition, two entry points. (convert_name is a no-op on already-
     converted names — they no longer contain ', ' — and generate_uri
     is deterministic, so re-derivation equals the stored values.)"""
-    docs_like = enriched.select(
+    docs_like = enriched.selectExpr(
         "doc_id",
         "title",
-        F.transform("authors", lambda a: a["name"]).alias("authors"),
-        F.transform("recipients", lambda r: r["name"]).alias("recipients"),
+        "transform(authors, a -> a.name) AS authors",
+        "transform(recipients, r -> r.name) AS recipients",
         "date_from",
         "date_to",
-        F.col("location.name").alias("location_name"),
+        "location.name AS location_name",
     )
-    classified_like = enriched.select(
-        "doc_id", F.posexplode_outer("indexing").alias("pos", "item")
-    ).select(
+    classified_like = enriched.selectExpr(
+        "doc_id", "posexplode_outer(indexing) AS (pos, item)"
+    ).selectExpr(
         "doc_id",
         "pos",
-        F.when(
-            F.col("item").isNotNull(),
-            F.struct(
-                F.col("item.term").alias("term"),
-                F.col("item.type").alias("type"),
-                F.col("item.uri").alias("uri"),
-            ),
-        ).alias("main"),
-        F.col("item.midsub").alias("midsub"),
-        F.col("item.sub").alias("sub"),
+        "CASE WHEN item IS NOT NULL THEN "
+        "struct(item.term AS term, item.type AS type, item.uri AS uri) END AS main",
+        "item.midsub AS midsub",
+        "item.sub AS sub",
     )
     return build_document_graph(docs_like, classified_like)
 

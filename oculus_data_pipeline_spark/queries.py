@@ -36,10 +36,12 @@ from .functions.text import (
     convert_name_oracle_query,
     generate_uri,
     generate_uri_oracle_sql,
+    generate_uri_sql,
     normalize_term,
     normalize_term_oracle_sql,
-    strip_parenthetical,
+    normalize_term_sql,
     strip_parenthetical_oracle_sql,
+    strip_parenthetical_sql,
 )
 from .operators import dedup, graph, similarity, textstats
 from .operators.textstats import toks_oracle_sql
@@ -630,12 +632,12 @@ def q20_normalize_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 normalize + T2 parenthetical-strip kernels on synthesized
     messy inputs (reference xml_to_json.py:7-14, :34-36)."""
     p = load_table(spark, sf_dir, "part")
-    messy = F.concat(F.lit("  "), F.upper("p_name"), F.lit("   (note) x  "))
-    parened = F.concat(F.col("p_name"), F.lit(" (cat) tail"))
-    return p.select(
+    messy = "concat('  ', upper(p_name), '   (note) x  ')"
+    parened = "concat(p_name, ' (cat) tail')"
+    return p.selectExpr(
         "p_partkey",
-        normalize_term(messy).alias("norm"),
-        strip_parenthetical(parened).alias("stripped"),
+        f"{normalize_term_sql(messy)} AS norm",
+        f"{strip_parenthetical_sql(parened)} AS stripped",
     )
 
 
@@ -763,12 +765,12 @@ def q31_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_oracle(num_perms: int = 16, bands: int = 4) -> str:
-    from .functions.hashing import MERSENNE31, minhash_params
+    from .functions.hashing import affine_hash, minhash_params
 
     rows_per_band = num_perms // bands
     h = md5_int_sql("shingle")
     perm_select = ",\n             ".join(
-        f"MIN(({a} * (({h}) % {MERSENNE31}) + {b}) % {MERSENNE31}) AS m{j}"
+        f"MIN({affine_hash(h, a, b)}) AS m{j}"
         for j, (a, b) in enumerate(minhash_params(num_perms))
     )
     band_selects = " UNION ALL ".join(
@@ -1188,22 +1190,21 @@ def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _graph_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, canon, label, key, name) per classified term — the
     term → node half of operators/graph.py's mapping over _doc_terms."""
-    canon = F.col("canon")
     return (
         _doc_terms(spark, sf_dir)
-        .select("doc_id", "norm_term", graph.canonical_label(F.col("label")).alias("canon"))
-        .select(
+        .selectExpr("doc_id", "norm_term", f"{graph.canonical_label('label')} AS canon")
+        .selectExpr(
             "doc_id",
             "canon",
-            *graph.term_node(canon, F.col("norm_term"), generate_uri(F.col("norm_term"))),
+            *graph.term_node("canon", "norm_term", generate_uri_sql("norm_term")),
         )
     )
 
 
 def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, rel_type) per classified term: its HAS_* edge."""
-    return _graph_terms(spark, sf_dir).select(
-        *graph.has_edge(F.col("canon"), F.col("key"), F.col("doc_id").cast("string"))
+    return _graph_terms(spark, sf_dir).selectExpr(
+        *graph.has_edge("canon", "key", "CAST(doc_id AS STRING)")
     )
 
 
@@ -3189,7 +3190,7 @@ def q102_data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     language spread, char-volume bounds — the standard pre-training
     corpus health check. One partial-aggregated pass over the scan."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(normalize_term(F.col("text")), " ")
+    toks = F.split(normalize_term("text"), " ")
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)).alias("n_null"),
@@ -4464,7 +4465,7 @@ def q122_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(normalize_term(F.col("text")), " ")).cast("long").alias(
+        F.size(F.split(normalize_term("text"), " ")).cast("long").alias(
             "n_tokens"
         ),
     )
@@ -7257,12 +7258,12 @@ def q170_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_accuracy_oracle(num_perms: int = 16, bands: int = 4) -> str:
-    from .functions.hashing import MERSENNE31, minhash_params
+    from .functions.hashing import affine_hash, minhash_params
 
     rows_per_band = num_perms // bands
     h = md5_int_sql("shingle")
     perm_select = ",\n             ".join(
-        f"MIN(({a} * (({h}) % {MERSENNE31}) + {b}) % {MERSENNE31}) AS m{j}"
+        f"MIN({affine_hash(h, a, b)}) AS m{j}"
         for j, (a, b) in enumerate(minhash_params(num_perms))
     )
     band_selects = " UNION ALL ".join(
@@ -8693,7 +8694,7 @@ def q190_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(normalize_term(F.col("text")), " ")).cast("long").alias(
+        F.size(F.split(normalize_term("text"), " ")).cast("long").alias(
             "n_tokens"
         ),
     )

@@ -8,10 +8,10 @@ from pyspark.sql import functions as F
 
 from oculus_data_pipeline_spark.functions.text import (
     convert_name,
+    convert_name_sql,
     generate_uri,
     normalize_term,
     strip_parenthetical,
-    with_converted_name,
 )
 
 from . import ref_model
@@ -49,22 +49,22 @@ def kernel_df(spark):
 def test_convert_name_matches_reference_model(spark, kernel_df):
     out = {
         r["name"]: r["converted"]
-        for r in with_converted_name(kernel_df, "name", "converted").collect()
+        for r in kernel_df.select("name", convert_name("name").alias("converted")).collect()
     }
     for n in NAMES:
         assert out[n] == ref_model.convert_name(n), n
 
 
 def test_convert_name_inside_transform_matches_reference_model(spark):
-    """convert_name is a plain Column, so it maps over a name array
-    element by element; NULL elements stay NULL, [] stays [] and a NULL
-    array stays NULL."""
+    """convert_name_sql takes any SQL expression, a lambda variable
+    too, so it maps over a name array element by element; NULL elements
+    stay NULL, [] stays [] and a NULL array stays NULL."""
     arrays = [NAMES, ["Jones, Frederick", None, ""], [], None]
     df = spark.createDataFrame(
         list(enumerate(arrays)), "id int, names array<string>"
     )
     rows = df.select(
-        "id", F.transform("names", convert_name).alias("converted")
+        "id", F.expr(f"transform(names, n -> {convert_name_sql('n')})").alias("converted")
     ).orderBy("id").collect()
     for names, r in zip(arrays, rows):
         if names is None:

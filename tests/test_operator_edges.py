@@ -478,7 +478,7 @@ def test_build_edges_null_and_unknown_labels_are_index_terms(spark):
     entity->doc keyed by term text; unknown labels got Term nodes but
     HAS_<LABEL> edges. Through the shared term_node/has_edge mapping
     both are HAS_TERM doc->term Term nodes keyed by text."""
-    from oculus_data_pipeline_spark.functions.text import generate_uri
+    from oculus_data_pipeline_spark.functions.text import generate_uri_sql
     from oculus_data_pipeline_spark.operators.graph import (
         canonical_label,
         has_edge,
@@ -490,16 +490,15 @@ def test_build_edges_null_and_unknown_labels_are_index_terms(spark):
          (1, "gadgetry", "animal"), (2, "acme corp", "organization")],
         "doc_id long, norm_term string, label string",
     )
-    canon = F.col("canon")
-    mapped = terms.select(
-        "doc_id", canonical_label(F.col("label")).alias("canon"), "norm_term"
-    ).select(
-        "doc_id", "canon", *term_node(canon, F.col("norm_term"), generate_uri(F.col("norm_term")))
+    mapped = terms.selectExpr(
+        "doc_id", f"{canonical_label('label')} AS canon", "norm_term"
+    ).selectExpr(
+        "doc_id", "canon", *term_node("canon", "norm_term", generate_uri_sql("norm_term"))
     )
     edges = {
         (r["src"], r["dst"]): r["rel_type"]
-        for r in mapped.select(
-            *has_edge(canon, F.col("key"), F.col("doc_id").cast("string"))
+        for r in mapped.selectExpr(
+            *has_edge("canon", "key", "CAST(doc_id AS STRING)")
         ).collect()
     }
     assert edges[("1", "widgets")] == "HAS_TERM"   # NULL label -> index term
@@ -641,7 +640,7 @@ def test_uri_stage_null_type_gets_uri(spark):
     out = stages.uri_stage(enriched).collect()[0]
     item = out["indexing"][0]
     expected = spark.range(1).select(
-        generate_uri(F.lit("widgets")).alias("u")
+        generate_uri("'widgets'").alias("u")
     ).collect()[0]["u"]
     assert item["uri"] == expected
 

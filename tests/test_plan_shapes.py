@@ -293,3 +293,57 @@ def test_graph_tables_read_one_materialization(spark, tmp_path):
     edges.write.parquet(str(out / "edges"))
     got = [rows(spark.read.parquet(str(out / t))) for t in ("nodes", "edges")]
     assert got == want
+
+
+def test_pipeline_builds_in_few_py4j_calls(spark, sf_dir, tmp_path, monkeypatch):
+    """Wide expressions are built as SQL text, one parse per projection,
+    not one py4j round trip per Column method: a warm run_pipeline plus
+    write_graph_parquet stays within 1,000 client→JVM calls (about
+    6,000 when the plan was composed Column by Column), and the simhash
+    and minhash plans stay within 400 each whatever their width."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    from oculus_data_pipeline_spark.operators import dedup
+    from oculus_data_pipeline_spark.operators.classify import EchoClassifier
+    from oculus_data_pipeline_spark.plans.pipeline import run_pipeline
+    from oculus_data_pipeline_spark.sinks.graph_sink import write_graph_parquet
+
+    from .test_pipeline import XML
+
+    send = ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(self, command, *args, **kwargs):
+        # 'm' commands release JVM objects from py4j's finalizers; they
+        # depend on garbage collection, not on the plan being built
+        if not command.startswith("m"):
+            calls[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    def py4j_calls(build) -> int:
+        build()  # warm: first use of a JVM class costs extra lookups
+        gc.collect()
+        gc.disable()
+        calls[0] = 0
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        try:
+            build()
+        finally:
+            monkeypatch.undo()
+            gc.enable()
+        return calls[0]
+
+    xml_dir = tmp_path / "xml"
+    xml_dir.mkdir()
+    (xml_dir / "corpus.xml").write_text(XML)
+
+    def pipeline():
+        nodes, edges = run_pipeline(spark, str(xml_dir), EchoClassifier())
+        write_graph_parquet(nodes, edges, str(tmp_path / "graph"))
+
+    docs = load_table(spark, sf_dir, "documents")
+    assert py4j_calls(pipeline) <= 1000
+    assert py4j_calls(lambda: dedup.simhash(docs)) <= 400
+    assert py4j_calls(lambda: dedup.minhash_signatures(docs)) <= 400
